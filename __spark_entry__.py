@@ -1394,7 +1394,9 @@ def q_seq_pack_mat(spark, sf):
     the manifest joined to per-doc token arrays, slices cut JVM-side
     and flattened in pos order — every output row is one ready
     512-token training sequence. Hash-exact vs the DuckDB list-slice
-    replay (the concatenate-and-chunk identity as a driver gate)."""
+    replay (the concatenate-and-chunk identity as a driver gate). Each
+    sequence is returned as the md5 of its NUL-joined tokens plus its
+    length, which both engines compute and compare as scalars."""
     from refined_spark.operators.packing import (TOKEN_PATTERN,
                                                  materialize_sequences,
                                                  pack_manifest)
@@ -1404,6 +1406,9 @@ def q_seq_pack_mat(spark, sf):
         "text", F.lit(TOKEN_PATTERN), F.lit(0)).alias("tokens"))
     m = pack_manifest(docs, seq_len=512, n_shards=4)
     return (materialize_sequences(m, toks)
+            .select("shard", "seq_id",
+                    F.md5(F.array_join("tokens", chr(0))).alias("tokens_md5"),
+                    F.size("tokens").alias("n_tokens"))
             .orderBy("shard", "seq_id"))
 
 
@@ -2546,14 +2551,19 @@ def _seq_pack_mat_oracle_sql() -> str:
         with {_seq_pack_fan_cte()}, tok as (
           select doc_id, regexp_extract_all(text, '{pat}') as toks
           from documents
+        ), seq as (
+          select m.shard, m.seq_id,
+                 flatten(list(tok.toks[m.doc_offset + 1 :
+                                       m.doc_offset + m.n_slice_tokens]
+                              order by m.pos_in_seq)) as tokens
+          from m join tok using (doc_id)
+          group by m.shard, m.seq_id
         )
-        select m.shard, m.seq_id,
-               flatten(list(tok.toks[m.doc_offset + 1 :
-                                     m.doc_offset + m.n_slice_tokens]
-                            order by m.pos_in_seq)) as tokens
-        from m join tok using (doc_id)
-        group by m.shard, m.seq_id
-        order by m.shard, m.seq_id
+        select shard, seq_id,
+               md5(array_to_string(tokens, chr(0))) as tokens_md5,
+               len(tokens) as n_tokens
+        from seq
+        order by shard, seq_id
     """
 
 

@@ -8,17 +8,21 @@ and tracks job progress with in-memory counters
 
 - each pipeline stage materializes to parquet under ``<run_dir>/<stage>/``
 - a ``manifest.json`` records: status, row count, wall time, input
-  fingerprint, and PER-PARTITION row counts (lineage: which partition of
-  the stage output came from which task, with its size)
-- on resume, stages with a complete+matching manifest load from parquet;
+  fingerprint, and PER-FILE row counts (lineage: each non-empty part
+  file the writer tasks produced, with its rows and bytes). Rows and
+  schemas come from the parquet footers on the driver, so neither the
+  lineage nor the read-back of a stage runs a Spark job
+- on resume, stages with a complete+matching manifest load from parquet
+  (a part file the manifest lists but the run_dir lacks fails loudly);
   the first missing/dirty stage and everything after recompute.
 
 The input fingerprint chains stage manifests (a stage's fingerprint
 includes its upstream's), so editing an upstream invalidates downstream
 automatically — file-grained resume upgraded to DAG-aware resume.
 
-At cluster scale this run_dir lives on object storage; stage writes are
-atomic via the parquet committer, and the manifest is written last.
+The run_dir is read through ``os.path`` (manifests, the cancel sentinel,
+footers), so on a cluster it is a shared mount; stage writes are atomic
+via the parquet committer, and the manifest is written last.
 """
 
 from __future__ import annotations
@@ -31,6 +35,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .footers import footer_row_counts, read_parquet
 
 MANIFEST = "manifest.json"
 CANCEL_SENTINEL = "CANCEL"
@@ -118,9 +124,16 @@ class CheckpointRunner:
         expected_fp = self._chain
         if (man is not None and man.get("status") == "ok"
                 and man.get("input_fingerprint") == expected_fp):
+            missing = [p["file"] for p in man.get("partitions", [])
+                       if not os.path.exists(os.path.join(data_dir,
+                                                          p["file"]))]
+            if missing:
+                raise FileNotFoundError(
+                    f"stage {name!r} manifest lists part files missing "
+                    f"from {data_dir}: {missing}")
             self._chain = man["output_fingerprint"]
             self.stages_resumed.append(name)
-            return self.spark.read.parquet(data_dir)
+            return read_parquet(self.spark, data_dir)
 
         self._check_cancelled(name)
         t0 = time.time()
@@ -144,20 +157,15 @@ class CheckpointRunner:
         # NOTE: a cancel that lands after the write completes lets this
         # stage finish its manifest (the work is durable — resume keeps
         # it) and stops the run at the NEXT stage's entry check.
-        out = self.spark.read.parquet(data_dir)
+        out = read_parquet(self.spark, data_dir)
         # lineage = the WRITTEN FILES (one per writer task — the stable
-        # writer-side layout), not spark_partition_id() of the read-back:
-        # the reader coalesces small files under maxPartitionBytes, so a
-        # read-split census varies with reader config and says nothing
-        # about which task produced what
-        parts = (
-            out.groupBy(F.element_at(
-                F.split(F.input_file_name(), "/"), -1).alias("file"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .orderBy("file")
-            .collect()
-        )
-        n_rows = sum(r["rows"] for r in parts)
+        # writer-side layout) with their footer row counts, read on the
+        # driver with no Spark job; zero-row files carry no lineage.
+        # Reader splits (spark_partition_id() of the read-back) would
+        # vary with maxPartitionBytes and say nothing about which task
+        # produced what.
+        parts = [(f, n) for f, n in footer_row_counts(data_dir) if n]
+        n_rows = sum(n for _, n in parts)
         out_fp = hashlib.sha256(
             (expected_fp + name + str(n_rows)).encode()).hexdigest()
         self._write_manifest(name, dict(
@@ -167,10 +175,9 @@ class CheckpointRunner:
             output_fingerprint=out_fp,
             rows=n_rows,
             wall_sec=round(time.time() - t0, 3),
-            partitions=[dict(file=r["file"], rows=r["rows"],
-                             bytes=os.path.getsize(
-                                 os.path.join(data_dir, r["file"])))
-                        for r in parts],
+            partitions=[dict(file=f, rows=n,
+                             bytes=os.path.getsize(os.path.join(data_dir, f)))
+                        for f, n in parts],
             schema=out.schema.simpleString(),
         ))
         self._chain = out_fp

@@ -195,14 +195,6 @@ def lookup_fanout(parsed: DataFrame, lang: str = "en",
     )
 
 
-def write_fanout(parsed: DataFrame, out_dir: str) -> None:
-    """S1 sink, single-pass shape: ONE scan writes every lookup via a
-    kind-partitioned parquet dataset (out_dir/kind=label/..., the
-    reference's 16-file sink as hive partitions)."""
-    lookup_fanout(parsed).write.mode("overwrite") \
-        .partitionBy("kind").parquet(out_dir)
-
-
 def class_vocab_from_edges(edges: DataFrame) -> DataFrame:
     """(class_name → dense 0-based class_idx), index = rank in the
     sorted distinct node-name list — the same deterministic rule the

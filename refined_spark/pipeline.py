@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import config
+from .footers import read_parquet
 from .operators.candidates import (
     explode_candidate_arrays,
     mention_candidate_arrays,
@@ -50,10 +51,10 @@ def load_tables(spark: SparkSession, fixture_dir: str) -> dict[str, DataFrame]:
     names = ["documents", "gold_spans", "pem", "entity", "entity_emb",
              "topic_class", "ed_weights", "class_edges", "gold_pairs",
              "link_counts"]
-    t = {
-        n: spark.read.parquet(os.path.join(fixture_dir, f"{n}.parquet"))
-        for n in names
-    }
+    # schemas come from the parquet footers on the driver: a bare
+    # spark.read.parquet runs one schema-inference job per table
+    t = {n: read_parquet(spark, os.path.join(fixture_dir, f"{n}.parquet"))
+         for n in names}
     # Parallelism comes from the SCAN, never from shuffling the raw corpus:
     # the fixture generator shards documents/gold_spans into many files
     # (real corpora are thousands of files), so map stages (extraction,
