@@ -14,6 +14,15 @@ results have been materialized (collected / written). The
 ``RefinedSpark`` facade folds this into its own ``release_caches``, and
 long-lived hosts (the correctness harness, a notebook) can call it
 between queries.
+
+:func:`local_checkpoint` is the other barrier: an eager
+``localCheckpoint()`` whose RDD the caller keeps and releases with
+:func:`release_checkpoints`. Later plans read the result as a
+``LogicalRDD`` leaf, so each reader neither re-runs nor re-optimises the
+subplan behind it. Two trade-offs against ``persist()``: a local
+checkpoint does not survive the loss of an executor (its blocks are the
+only copy), and once released, frames derived from it fail instead of
+recomputing (the lineage is cut).
 """
 
 from __future__ import annotations
@@ -65,3 +74,17 @@ def release_caches() -> int:
         except Exception:  # noqa: BLE001 — session may already be stopped
             pass
     return n
+
+
+def local_checkpoint(df: DataFrame, held: list) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``; appends the checkpoint's RDD to
+    ``held`` for :func:`release_checkpoints`."""
+    out = df.localCheckpoint(eager=True)
+    held.append(out._jdf.queryExecution().analyzed().rdd())
+    return out
+
+
+def release_checkpoints(held: list) -> None:
+    """Drop the blocks of every checkpoint in ``held`` and empty it."""
+    while held:
+        held.pop().unpersist(False)

@@ -40,6 +40,9 @@ from .footers import footer_row_counts, read_parquet
 
 MANIFEST = "manifest.json"
 CANCEL_SENTINEL = "CANCEL"
+# the thread-local properties SparkContext.setJobGroup sets
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel")
 
 
 class JobCancelledError(RuntimeError):
@@ -138,6 +141,9 @@ class CheckpointRunner:
         self._check_cancelled(name)
         t0 = time.time()
         sc = self.spark.sparkContext
+        # the caller's job group comes back after the stage (a caller
+        # that tags its own jobs, to cancel or count them, keeps its tag)
+        caller_group = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
         sc.setJobGroup(self.job_group, f"stage:{name}",
                        interruptOnCancel=True)
         try:
@@ -153,7 +159,8 @@ class CheckpointRunner:
                     f"stage {name!r} interrupted by cancel") from e
             raise
         finally:
-            sc.setJobGroup("", "")
+            for k, v in caller_group.items():
+                sc.setLocalProperty(k, v)
         # NOTE: a cancel that lands after the write completes lets this
         # stage finish its manifest (the work is durable — resume keeps
         # it) and stops the run at the NEXT stage's entry check.

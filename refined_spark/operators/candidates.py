@@ -339,17 +339,6 @@ def with_person_coref_python(direct: DataFrame,
     return per_mention.groupBy("url").applyInPandas(run, CANDIDATE_SCHEMA)
 
 
-def generate_candidates(mentions: DataFrame, pem: DataFrame,
-                        entity: DataFrame,
-                        broadcast_pem: bool = True,
-                        backward: bool = False) -> DataFrame:
-    """M2+M3+M4 composed."""
-    return with_person_coref(
-        direct_candidates(mentions, pem, entity, broadcast_pem=broadcast_pem),
-        mentions=mentions, backward=backward,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Array-native candidate path (the production physical plan)
 # ---------------------------------------------------------------------------

@@ -138,44 +138,60 @@ def extracted_text_col(html_col):
     return F.replace(s, F.lit(nul), F.lit("\n"))
 
 
-def extraction_mismatches(documents: DataFrame, mod: int = 256) -> DataFrame:
+def _sampled(mod: int) -> F.Column:
+    """The guard's deterministic sample: ``xxhash64(url) % mod == 0``."""
+    return F.pmod(F.xxhash64("url"), F.lit(mod)) == 0
+
+
+def sampled_html_col(mod: int) -> F.Column:
+    """``html`` on the guard's sample rows, NULL elsewhere — the spec
+    input a fused scan carries next to its JVM text (see
+    mentions.detect_mention_rows ``spec_col``)."""
+    return F.when(_sampled(mod), F.col("html"))
+
+
+def extraction_contract_error(urls: list[str]) -> AssertionError:
+    return AssertionError(
+        f"JVM extractor diverged from parser spec on sampled urls "
+        f"{urls} — corpus violates the extraction HTML contract")
+
+
+def assert_extraction_contract(documents: DataFrame,
+                               mod: int = 256) -> int:
     """Sampled runtime cross-check of the JVM extractor against the
     Python parser spec: a deterministic xxhash64(url) % mod == 0 sample
-    runs BOTH paths and returns the mismatching urls.
+    runs BOTH paths. Raises on any mismatch (naming up to 5 urls);
+    returns the number of sampled documents checked.
 
     Why: the JVM chain equals the parser only on the corpus HTML contract
     (no bare '&nbsp;'-class named refs, no '>' inside attribute values,
     valid UTF-8). On a real crawl a contract violation would silently
     shift every downstream span offset — this check makes it fail loudly
-    for ~1/mod of the scan cost. Production jobs (tools/run_job.py) run
-    it as a guard action; golden pytest covers the full fixture corpus.
+    for ~1/mod of the scan cost. One job: each partition emits one
+    summary row (sampled, mismatched, up to 5 urls) that the driver sums.
+    Production jobs (tools/run_job.py) run it as a guard action; e2e
+    ``run_pipeline`` runs the same check inside its mentions scan
+    instead; golden pytest covers the full fixture corpus.
     """
-    sample = documents.where(F.pmod(F.xxhash64("url"), F.lit(mod)) == 0)
-    both = sample.select("url", "html",
-                         extracted_text_col("html").alias("jvm_text"))
+    both = documents.where(_sampled(mod)).select(
+        "url", "html", extracted_text_col("html").alias("jvm_text"))
 
     def check(batches):
+        n, bad = 0, []
         for pdf in batches:
-            bad = [u for u, h, j in zip(pdf["url"], pdf["html"],
-                                        pdf["jvm_text"])
-                   if extract_text(h) != j]
-            yield pd.DataFrame({"url": bad})
+            n += len(pdf)
+            bad += [u for u, h, j in zip(pdf["url"], pdf["html"],
+                                         pdf["jvm_text"])
+                    if extract_text(h) != j]
+        yield pd.DataFrame({"n": [n], "n_bad": [len(bad)],
+                            "bad": [bad[:5]]})
 
-    return both.mapInPandas(check, "url string")
-
-
-def assert_extraction_contract(documents: DataFrame,
-                               mod: int = 256) -> int:
-    """Raise if the sampled JVM-vs-parser cross-check finds mismatches;
-    returns the number of sampled documents checked (0 mismatches)."""
-    mism = extraction_mismatches(documents, mod=mod)
-    bad = [r["url"] for r in mism.limit(5).collect()]
-    if bad:
-        raise AssertionError(
-            f"JVM extractor diverged from parser spec on sampled urls "
-            f"{bad} — corpus violates the extraction HTML contract")
-    return int(documents.where(
-        F.pmod(F.xxhash64("url"), F.lit(mod)) == 0).count())
+    rows = both.mapInPandas(
+        check, "n long, n_bad long, bad array<string>").collect()
+    if sum(r["n_bad"] for r in rows):
+        raise extraction_contract_error(
+            [u for r in rows for u in r["bad"]][:5])
+    return sum(r["n"] for r in rows)
 
 
 def with_extracted_text(documents: DataFrame, out_col: str = "extracted",

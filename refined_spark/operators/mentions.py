@@ -228,14 +228,19 @@ _MENTION_SCHEMA = StructType([
 ])
 
 
-def _mention_rows_runner(dict_src, from_html: bool):
+def _mention_rows_runner(dict_src, from_html: bool,
+                         spec_col: str | None = None):
     """Shared mapInPandas body: (url, html|text) batches -> mention rows.
 
     dict_src: ("bc", broadcast) for a driver-broadcast key set (fixture
     scale) or ("path", parquet_path) for the executor-side artifact load
-    (production scale — zero driver materialization)."""
+    (production scale — zero driver materialization).
+
+    spec_col: a column of sampled html (NULL off the sample) whose parser
+    extraction must equal the batch's text; a mismatch raises the
+    extraction-contract error before the batch's rows are emitted."""
     from ..functions.normalize import normalize_surface_form
-    from .extract import extract_text
+    from .extract import extract_text, extraction_contract_error
 
     def run(batches):
         if dict_src[0] == "bc":
@@ -248,8 +253,13 @@ def _mention_rows_runner(dict_src, from_html: bool):
             urls, starts, lengths, texts_m, norms, ctxs, mkeys = (
                 [], [], [], [], [], [], [])
             src = (pdf["html"] if from_html else pdf["text"]).tolist()
-            for url, payload in zip(pdf["url"].tolist(), src):
+            specs = (pdf[spec_col].tolist() if spec_col
+                     else [None] * len(src))
+            bad = []
+            for url, payload, spec in zip(pdf["url"].tolist(), src, specs):
                 text = extract_text(payload) if from_html else (payload or "")
+                if spec is not None and extract_text(spec) != text:
+                    bad.append(url)
                 for off, ln, phrase in _match_doc(text, d, fw, tok_cache):
                     nrm = phrase_cache.get(phrase)
                     if nrm is None:
@@ -270,6 +280,8 @@ def _mention_rows_runner(dict_src, from_html: bool):
                             "mention key: start offset >= 10^8 in "
                             f"{url!r}")
                     mkeys.append(f"{url}:{off:08d}")
+            if bad:
+                raise extraction_contract_error(bad[:5])
             yield pd.DataFrame(dict(
                 url=urls, start=pd.array(starts, dtype="int32"),
                 length=pd.array(lengths, dtype="int32"),
@@ -290,7 +302,8 @@ def _dict_src(spark, match_keys, dict_path):
 def detect_mention_rows(spark, documents: DataFrame,
                         match_keys: list[str] | None = None,
                         text_col: str = "text",
-                        dict_path: str | None = None) -> DataFrame:
+                        dict_path: str | None = None,
+                        spec_col: str | None = None) -> DataFrame:
     """One-Arrow-crossing mention detection over an existing text column
     (e.g. the JVM extraction output): text in, mention rows out. Same
     output as :func:`fused_extract_detect`; use when extraction already
@@ -299,10 +312,16 @@ def detect_mention_rows(spark, documents: DataFrame,
     Pass ``dict_path`` (a parquet artifact written by
     ``pipeline.write_match_dictionary``) to load the key set executor-side
     — the production path; ``match_keys`` broadcasts from the driver and
-    is for fixture-scale runs/tests only."""
+    is for fixture-scale runs/tests only.
+
+    ``spec_col`` (e.g. :func:`~.extract.sampled_html_col`): the sampled
+    extraction-contract guard rides this scan — each non-NULL html is
+    parsed by the Python spec and compared with ``text_col``; a mismatch
+    fails the job (a ``PythonException`` carrying the contract message)."""
     run = _mention_rows_runner(_dict_src(spark, match_keys, dict_path),
-                               from_html=False)
-    return (documents.select("url", F.col(text_col).alias("text"))
+                               from_html=False, spec_col=spec_col)
+    cols = [F.col(spec_col)] if spec_col else []
+    return (documents.select("url", F.col(text_col).alias("text"), *cols)
             .mapInPandas(run, _MENTION_SCHEMA))
 
 

@@ -46,15 +46,6 @@ def _embed_udf(words: pd.Series) -> pd.Series:
     )
 
 
-def ctx_embeddings(mentions: DataFrame) -> DataFrame:
-    """(ctx_word, ctx_emb) for each distinct context word — tiny dim table."""
-    return (
-        mentions.select("ctx_word").where(F.col("ctx_word").isNotNull())
-        .distinct()
-        .withColumn("ctx_emb", _embed_udf(F.col("ctx_word")))
-    )
-
-
 def score_candidates(
     candidates: DataFrame,
     mentions: DataFrame,

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import config
+from .caching import local_checkpoint, release_checkpoints
 from .footers import read_parquet
 from .operators.candidates import (
     explode_candidate_arrays,
@@ -36,7 +37,12 @@ from .operators.candidates import (
     pem_surface_arrays,
 )
 from .operators.clustering import cluster_mentions
-from .operators.extract import extracted_text_col, with_extracted_text
+from .operators.extract import (
+    assert_extraction_contract,
+    extracted_text_col,
+    sampled_html_col,
+    with_extracted_text,
+)
 from .operators.mentions import detect_mention_rows, mentions_from_spans
 from .operators.scoring import (
     explode_scored_arrays,
@@ -66,7 +72,19 @@ def load_tables(spark: SparkSession, fixture_dir: str) -> dict[str, DataFrame]:
 
 
 def load_weights(ed_weights: DataFrame) -> dict[str, float]:
-    return {r["feature"]: r["weight"] for r in ed_weights.collect()}
+    """feature -> weight of the (5-row) ``ed_weights`` table, read on the
+    driver with pyarrow from the table's local files: no Spark job. The
+    frame must be a plain read of the table (as ``load_tables`` gives)."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    # ParquetFile.read on the calling thread: read_table would start
+    # Arrow's thread pools in the driver for five rows
+    return {r["feature"]: r["weight"]
+            for f in ed_weights.inputFiles()
+            for r in pq.ParquetFile(unquote(urlparse(f).path)).read(
+                columns=["feature", "weight"], use_threads=False).to_pylist()}
 
 
 def match_dictionary_df(pem: DataFrame, entity: DataFrame) -> DataFrame:
@@ -172,6 +190,20 @@ def run_pipeline(
     the reference's ``Doc.from_text`` shape (dataset_factory.py feeds
     raw dataset text with no HTML stage) — so extraction and its
     contract guard are skipped.
+
+    Barrier policy: every per-run table is computed once. Doc-scale
+    frames (``mentions``, ``links``) are ``persist()``ed and counted in
+    dependency order. Vocabulary-scale frames (the alias arrays, the
+    observed (ctx_word, qcode) pairs, the feature map, the pair logits)
+    are eager local checkpoints (caching.local_checkpoint): later plans
+    read them as leaves, so the final action neither re-runs them at
+    each use site (pushed-down filters and pruned columns defeat
+    exchange reuse) nor re-optimises their subplans. A local checkpoint
+    does not survive the loss of an executor — the trade the CC rounds
+    already make; the resumable production job is
+    checkpoint.run_pipeline_checkpointed. ``unpersist()`` ends the
+    result's life: it releases the caches and the checkpoints, after
+    which frames derived from the result fail instead of recomputing.
     """
     t = load_tables(spark, fixture_dir)
     # the API facade (api.RefinedSpark) processes caller-supplied corpora
@@ -191,18 +223,24 @@ def run_pipeline(
     elif emb_precision != "fp32":
         raise ValueError(f"emb_precision must be fp32|fp16, "
                          f"got {emb_precision!r}")
+    # checked before any barrier, so a bad argument strands no cache
+    if typing_mode not in ("prior", "et"):
+        raise ValueError(f"typing_mode must be prior|et, "
+                         f"got {typing_mode!r}")
 
     # Default-on sampled extraction-contract guard: the JVM extractor is
     # byte-identical to the Python parser spec only on the corpus HTML
     # contract; a violating corpus would silently shift every downstream
-    # span offset. One ~1/mod-of-a-scan action makes it fail loudly here
-    # instead (pass None to opt out; tools/run_job.py runs the denser
-    # mod=256 variant as a standalone guard stage).
-    if extraction_guard_mod and not pre_extracted:
-        from .operators.extract import assert_extraction_contract
-
-        assert_extraction_contract(t["documents"],
-                                   mod=extraction_guard_mod)
+    # span offset, so ~1/mod of the documents run both extractors and a
+    # mismatch fails loudly (pass None to opt out; tools/run_job.py runs
+    # the denser mod=256 variant as a standalone guard stage). In e2e
+    # mode the check rides the mentions scan (the sampled html crosses
+    # to Python next to its JVM text) and fires inside the mentions
+    # barrier; spans mode has no Python stage on the scan, so it runs
+    # the one-job standalone guard.
+    guard = bool(extraction_guard_mod) and not pre_extracted
+    if guard and mode == "spans":
+        assert_extraction_contract(t["documents"], mod=extraction_guard_mod)
 
     if pre_extracted and mode == "spans":
         docs = t["documents"].select("url", "text")
@@ -218,12 +256,18 @@ def run_pipeline(
         # chain, golden-checked vs the Python parser); only the dictionary
         # matcher crosses to Python — one Arrow hop, text in, mention
         # rows out
-        docs = (t["documents"].select("url", "text") if pre_extracted
-                else t["documents"].withColumn(
-                    "text", extracted_text_col("html")))
+        if pre_extracted:
+            docs = t["documents"].select("url", "text")
+        else:
+            spec = ([sampled_html_col(extraction_guard_mod).alias(
+                "spec_html")] if guard else [])
+            docs = t["documents"].select(
+                "url", extracted_text_col("html").alias("text"), *spec)
         dict_path = write_match_dictionary(
             t["pem"], t["entity"], dict_dir or _default_dict_dir(fixture_dir))
-        mentions = detect_mention_rows(spark, docs, dict_path=dict_path)
+        mentions = detect_mention_rows(
+            spark, docs, dict_path=dict_path,
+            spec_col="spec_html" if guard else None)
 
     # The mentions subtree (html parse + dictionary match — the most
     # expensive map stage) is referenced by candidates, scoring AND links;
@@ -231,39 +275,41 @@ def run_pipeline(
     # At cluster scale the equivalent is the checkpointed stage table
     # (checkpoint.py); locally an in-memory persist.
     mentions = mentions.persist()
+    # The distinct (surface, ctx) pairs drive the feature domain, the
+    # pair logits and the ET table: persisted so that the doc-scale
+    # mentions cache is scanned once for this vocabulary-sized result.
+    surf_ctx = mentions.select("norm_sf", "ctx_word").distinct().persist()
+    # ORDERED materialization barriers, one per frame in dependency
+    # order: concurrently-submitted first readers of a lazily-persisted
+    # frame each recompute its full upstream (the bench stage log showed
+    # the extraction+MD map stage running 4x side by side), so each
+    # doc-scale pass happens exactly once this way.
+    try:
+        mentions.count()    # the e2e extraction guard fires here
+    except Exception:
+        mentions.unpersist()
+        surf_ctx.unpersist()
+        raise
+    surf_ctx.count()
     # Array-native candidate/scoring path: one row per mention carrying
     # its merged candidate ARRAY. Multi-word mentions never shuffle;
     # single-word mentions shuffle twice (coref join + latest-reg agg)
-    # with key-width rows; scoring + linking are pure map stages over a
-    # broadcast feature map. First full-table shuffle of the whole job
-    # is the final cluster aggregation.
-    pem_arrays = pem_surface_arrays(t["pem"], t["entity"])
+    # with key-width rows; scoring + linking are pure map stages over
+    # broadcast vocabulary tables. First full-table shuffle of the whole
+    # job is the final cluster aggregation.
+    ckpts: list = []        # RDDs of the vocabulary-scale checkpoints
+    pem_arrays = local_checkpoint(
+        pem_surface_arrays(t["pem"], t["entity"]), ckpts)
     cand_arr = mention_candidate_arrays(
         mentions, pem_arrays, broadcast_pem=broadcast_pem,
         backward=backward_coref)
     weights = load_weights(t["ed_weights"])
-    # The distinct (surface, ctx) pairs drive BOTH broadcast builds
-    # (feature map + pair logits). Persisted because each broadcast
-    # build is its own job: without the persist every build re-scans the
-    # full mentions cache for a vocabulary-sized result. This is the
-    # ONLY doc-scale pass outside the main pipeline action.
-    surf_ctx = mentions.select("norm_sf", "ctx_word").distinct().persist()
-    # ORDERED materialization barriers. The broadcast builds (feature
-    # map, pair logits, coref word table) and the main action all
-    # traverse these caches from separate concurrently-submitted jobs;
-    # a lazily-persisted frame dedups work only across SEQUENTIAL reads,
-    # so every concurrent first reader recomputes the full upstream —
-    # the bench stage log showed the extraction+MD map stage running 4x
-    # side by side. One count per cache, in dependency order, makes each
-    # doc-scale pass happen exactly once. Cluster equivalent: the
-    # checkpointed stage tables (checkpoint.py).
-    mentions.count()
-    surf_ctx.count()
     # feature domain from surf_ctx (not cand_arr), so the candidate
     # subtree is consumed exactly once per action and never needs
     # caching; zero doc-scale shuffles (see observed_pairs docstring)
-    pairs = observed_pairs_from_mentions(mentions, pem_arrays,
-                                         surf_ctx=surf_ctx)
+    pairs = local_checkpoint(
+        observed_pairs_from_mentions(mentions, pem_arrays,
+                                     surf_ctx=surf_ctx), ckpts)
     typing_frame = None
     if typing_mode == "et":
         # F4 forward pass over the distinct context vocabulary; the
@@ -276,11 +322,10 @@ def run_pipeline(
         names = class_names_sorted(class_vocab_from_edges(t["class_edges"]))
         typing_frame = et_confidence_table(
             surf_ctx.select("ctx_word"), names)
-    elif typing_mode != "prior":
-        raise ValueError(f"typing_mode must be prior|et, "
-                         f"got {typing_mode!r}")
-    fmap = feature_map_by_ctx(pairs, t["entity"], t["entity_emb"],
-                              t["topic_class"], typing_frame=typing_frame)
+    fmap = local_checkpoint(
+        feature_map_by_ctx(pairs, t["entity"], t["entity_emb"],
+                           t["topic_class"], typing_frame=typing_frame),
+        ckpts)
     # Zipf dedup of the scoring math: logits once per DISTINCT
     # (surface, ctx) pair, broadcast back; per-mention evaluation only
     # for coref receivers (mention-specific candidate arrays)
@@ -290,9 +335,10 @@ def run_pipeline(
     pair_frame = pair_candidate_arrays(
         surf_ctx, pem_arrays, broadcast_pem=broadcast_pem,
     ).repartition(spark.sparkContext.defaultParallelism)
-    pair_logits = with_candidate_logits(
-        pair_frame, t["entity"], t["entity_emb"], t["topic_class"],
-        weights, feature_map=fmap)
+    pair_logits = local_checkpoint(
+        with_candidate_logits(pair_frame, t["entity"], t["entity_emb"],
+                              t["topic_class"], weights, feature_map=fmap),
+        ckpts)
     with_logits = with_candidate_logits(
         cand_arr, t["entity"], t["entity_emb"], t["topic_class"], weights,
         feature_map=fmap, pair_logits=pair_logits)
@@ -307,12 +353,15 @@ def run_pipeline(
     clusters = cluster_mentions(links)
 
     def unpersist() -> None:
-        """Release the persisted frames — callers that run multiple
-        pipelines per session (entry harness, tests) should invoke this
-        when a result set is superseded, or cached blocks accumulate."""
+        """End the result's life: release the persisted frames and the
+        checkpoints. Callers that run multiple pipelines per session
+        (entry harness, tests) invoke this when a result set is
+        superseded, or cached blocks accumulate; afterwards the result's
+        frames fail on use (checkpointed lineage is not recomputed)."""
         mentions.unpersist()
         surf_ctx.unpersist()
         links.unpersist()
+        release_checkpoints(ckpts)
 
     return dict(mentions=mentions, candidates=candidates, scored=scored,
                 links=links, clusters=clusters, cand_arr=cand_arr,

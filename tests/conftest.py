@@ -37,3 +37,11 @@ def sf001():
 @pytest.fixture(scope="session")
 def sf01():
     return os.path.join(TESTDATA, "sf0.01")
+
+
+@pytest.fixture
+def persistent_rdd_ids(spark):
+    """Ids of the session's persisted RDDs. Compare id sets, not counts:
+    the JVM collects an earlier test's unreleased pipeline result at any
+    time, and its local checkpoints leave the registry with it."""
+    return lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())

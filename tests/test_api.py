@@ -30,6 +30,7 @@ def test_process_documents_matches_pipeline(spark, fx_t1):
     assert all(row["top_k"][i]["score"] >= row["top_k"][i + 1]["score"]
                for i in range(len(row["top_k"]) - 1))
     res["unpersist"]()
+    ref.release_caches()
 
 
 def test_process_text_single_doc(spark, fx_t1):
@@ -46,24 +47,23 @@ def test_process_text_single_doc(spark, fx_t1):
     assert ent.where(F.col("qcode") == q).count() == 1
 
 
-def test_facade_releases_pipeline_caches(spark, fx_t1):
+def test_facade_releases_pipeline_caches(spark, fx_t1, persistent_rdd_ids):
     """round-2 judge finding: the facade stranded persisted
     mentions/surf_ctx/links blocks on every call. The collecting sugar
     methods must drain the unpersist hooks; lazy process_documents
     exposes release_caches() for the caller."""
-    sc = spark.sparkContext._jsc.sc()
-    before = sc.getPersistentRDDs().size()
+    before = persistent_rdd_ids()
     ref = RefinedSpark(spark, fx_t1)
     ref.process_text("England won the cup")
-    assert sc.getPersistentRDDs().size() == before
+    assert not persistent_rdd_ids() - before
 
     docs = spark.read.parquet(os.path.join(fx_t1, "documents.parquet"))
     gold = spark.read.parquet(os.path.join(fx_t1, "gold_spans.parquet"))
     out = ref.process_documents(docs, spans_df=gold)
     out.count()
-    assert sc.getPersistentRDDs().size() > before  # caches live while lazy
+    assert persistent_rdd_ids() - before  # caches live while lazy
     ref.release_caches()
-    assert sc.getPersistentRDDs().size() == before
+    assert not persistent_rdd_ids() - before
 
 
 def test_facade_et_mode_and_predicted_types(spark, fx_t1):

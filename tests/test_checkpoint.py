@@ -189,3 +189,24 @@ def test_stage_lineage_is_writer_file_level(spark, tmp_path_factory):
         assert p["file"].endswith(".parquet")
         assert os.path.getsize(
             os.path.join(data_dir, p["file"])) == p["bytes"] > 0
+
+
+def test_stage_restores_caller_job_group(spark, tmp_path_factory):
+    """A stage tags its jobs with the run's group, then hands the caller's
+    own group (id, description, interrupt flag) back."""
+    from refined_spark.checkpoint import CheckpointRunner
+
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel")
+    sc.setJobGroup("caller", "caller's jobs", interruptOnCancel=True)
+    try:
+        want = [sc.getLocalProperty(k) for k in props]
+        runner = CheckpointRunner(spark, str(tmp_path_factory.mktemp("grp")))
+        runner.stage("s", lambda: spark.range(10))
+        assert sc.statusTracker().getJobIdsForGroup(runner.job_group)
+        assert [sc.getLocalProperty(k) for k in props] == want == [
+            "caller", "caller's jobs", "true"]
+    finally:
+        for k in props:
+            sc.setLocalProperty(k, None)

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from refined_spark.checkpoint import CheckpointRunner
 from refined_spark.footers import footer_schema
-from refined_spark.pipeline import load_tables
+from refined_spark.pipeline import load_tables, load_weights
 
 TABLES = ["documents", "gold_spans", "pem", "entity", "entity_emb",
           "topic_class", "ed_weights", "class_edges", "gold_pairs",
@@ -102,3 +102,12 @@ def test_resume_with_missing_part_file_fails(spark, tmp_path_factory):
     resumed = CheckpointRunner(spark, run_dir, run_inputs=dict(k="v"))
     with pytest.raises(FileNotFoundError, match=lost):
         resumed.stage("s", lambda: spark.range(10))
+
+
+def test_load_weights_launches_no_jobs(spark, fx_t1):
+    """The 5-row weights table is read on the driver from its files."""
+    ed = load_tables(spark, fx_t1)["ed_weights"]
+    got, n_jobs = _jobs_launched(spark, lambda: load_weights(ed))
+    assert n_jobs == 0
+    assert got == {r["feature"]: r["weight"] for r in ed.collect()}
+    assert len(got) == 5

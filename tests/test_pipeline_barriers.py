@@ -1,0 +1,40 @@
+"""run_pipeline's barrier policy: doc-scale frames persisted,
+vocabulary-scale frames checkpointed, and ``unpersist()`` releasing
+both."""
+
+import pytest
+
+from refined_spark.pipeline import run_pipeline
+
+VOCAB_TABLES = ("pem", "entity", "entity_emb", "topic_class")
+
+
+@pytest.mark.parametrize("mode", ["spans", "e2e"])
+def test_unpersist_releases_every_persisted_rdd(spark, fx_t1, mode,
+                                                persistent_rdd_ids):
+    before = persistent_rdd_ids()
+    res = run_pipeline(spark, fx_t1, mode=mode)
+    assert res["clusters"].count() > 0
+    assert persistent_rdd_ids() - before
+    res["unpersist"]()
+    assert not persistent_rdd_ids() - before
+    # the checkpointed lineage is gone: a derived frame fails, loudly
+    with pytest.raises(Exception, match="(?i)checkpoint"):
+        res["with_logits"].count()
+
+
+@pytest.mark.parametrize("mode", ["spans", "e2e"])
+def test_scoring_plan_reads_only_barriers(spark, fx_t1, mode):
+    """The scoring plan reads the vocabulary tables only through their
+    checkpoints: no scan of the resource tables and no embedding UDF."""
+    res = run_pipeline(spark, fx_t1, mode=mode)
+    try:
+        wl = res["with_logits"]
+        files = wl.inputFiles()
+        assert not [f for f in files for n in VOCAB_TABLES
+                    if f"/{n}.parquet" in f]
+        plan = wl._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" in plan
+        assert "_embed_udf" not in plan
+    finally:
+        res["unpersist"]()
