@@ -498,13 +498,13 @@ def q_entity_index(spark, sf):
 
 def q_mention_detect(spark, sf):
     from refined_spark.operators.extract import with_extracted_text
-    from refined_spark.operators.mentions import detect_mentions
+    from refined_spark.operators.mentions import detect_mention_rows
     from refined_spark.pipeline import match_dictionary
 
     docs = with_extracted_text(_fx(spark, sf, "documents")).withColumn(
         "text", F.col("extracted")).drop("extracted")
     keys = match_dictionary(_fx(spark, sf, "pem"), _fx(spark, sf, "entity"))
-    return detect_mentions(spark, docs, keys).select(
+    return detect_mention_rows(spark, docs, keys).select(
         "url", "start", "length", "mention_text").orderBy("url", "start")
 
 

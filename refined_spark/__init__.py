@@ -9,9 +9,10 @@ table of Common-Crawl-style web pages
 Design stance (see SURVEY.md §7): declarative DataFrame plans wherever the
 semantics allow (Catalyst/AQE optimize them for free); vectorized
 pandas/Arrow UDFs for per-row text math (never row-at-a-time Python UDFs);
-``groupBy(url).applyInPandas`` only for the single order-sensitive operator
-(person-name coreference); an iterative large-star/small-star DataFrame
-loop for connected components.
+the single order-sensitive operator (person-name coreference) as a
+(url, word) join plus one latest-registration aggregation over candidate
+arrays; an iterative large-star/small-star DataFrame loop for connected
+components.
 """
 
 __version__ = "0.1.0"

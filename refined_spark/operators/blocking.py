@@ -11,13 +11,13 @@ band key. Bucket population is uniform by construction, which bounds
 candidate pairs per partition — the property the north_rule asks for at
 10^12 docs.
 
-Skew salting: :func:`salted_candidate_join` implements the classic
-replicate-dim/salt-fact pattern for the non-broadcast pem join — hot
-blocking keys (detected with a cheap count pre-pass, SURVEY.md §4) are
-split into SKEW_SALT_BUCKETS sub-keys; the pem side replicates per salt,
-the mention side picks a deterministic salt — pre-AQE engines needed this
-manually and AQE still benefits when hot keys dwarf its splitting
-granularity.
+Skew salting: :func:`salted_array_join` implements the classic
+replicate-dim/salt-fact pattern for the non-broadcast alias-array join —
+hot blocking keys (detected with the cheap count pre-pass
+:func:`hot_keys`, SURVEY.md §4) are split into SKEW_SALT_BUCKETS
+sub-keys; the alias side replicates per salt, the mention side picks a
+deterministic salt — pre-AQE engines needed this manually and AQE still
+benefits when hot keys dwarf its splitting granularity.
 """
 
 from __future__ import annotations
@@ -137,11 +137,11 @@ def salted_array_join(mentions: DataFrame, pem_arrays: DataFrame,
                       ) -> DataFrame:
     """Skew-salted shuffle join for the ARRAY-shaped pem (one alias-array
     row per surface) — the escape hatch when the alias table outgrows
-    broadcast range. Same replicate-dim/salt-fact pattern as
-    :func:`salted_candidate_join`: hot surfaces replicate their (single)
-    array row ``buckets`` ways, each mention picks a deterministic salt,
-    so no reduce task receives more than 1/buckets of a hot key's
-    mentions. mentions must carry (norm_sf, mention_key); returns
+    broadcast range. Hot surfaces replicate their (single) array row
+    ``buckets`` ways, each mention picks a deterministic salt, so no
+    reduce task receives more than 1/buckets of a hot key's mentions;
+    other surfaces join with salt 0 on both sides (no replication
+    cost). mentions must carry (norm_sf, mention_key); returns
     mentions + pem_arr (left join shape)."""
     hot_b = F.broadcast(hot.withColumnRenamed(hot.columns[0], "hk")
                         .withColumn("is_hot", F.lit(True)))
@@ -169,43 +169,3 @@ def salted_array_join(mentions: DataFrame, pem_arrays: DataFrame,
         .drop("surface_form", "_salt")
     )
 
-
-def salted_candidate_join(mentions: DataFrame, pem: DataFrame,
-                          hot: DataFrame,
-                          buckets: int = config.SKEW_SALT_BUCKETS
-                          ) -> DataFrame:
-    """Shuffle-join mentions⋈pem on the blocking key with hot keys salted.
-
-    mentions: must carry norm_sf; pem: surface_form-keyed. Returns the
-    same shape as the plain join. Non-hot keys join with salt 0 on both
-    sides (no replication cost)."""
-    hot_b = F.broadcast(hot.withColumnRenamed(hot.columns[0], "hk")
-                        .withColumn("is_hot", F.lit(True)))
-    m = (
-        mentions.join(hot_b, mentions.norm_sf == hot_b.hk, "left")
-        .withColumn(
-            "salt",
-            F.when(F.col("is_hot"),
-                   F.pmod(F.xxhash64("mention_key"), F.lit(buckets))
-                   .cast("int"))
-            .otherwise(F.lit(0)))
-        .drop("hk", "is_hot")
-    )
-    salts = F.explode(
-        F.when(F.col("is_hot"),
-               F.sequence(F.lit(0), F.lit(buckets - 1)))
-        .otherwise(F.array(F.lit(0)))).alias("salt")
-    # carry EVERY pem column (is_human etc.), not a hard-coded subset —
-    # the r5 wiring of this join into direct_candidates' non-broadcast
-    # path needs the same output shape as the plain join
-    pem_cols = list(pem.columns)
-    p = (
-        pem.join(hot_b, pem.surface_form == hot_b.hk, "left")
-        .select(*pem_cols, "is_hot")
-        .select(*pem_cols, salts)
-    )
-    return (
-        m.join(p, (m.norm_sf == p.surface_form)
-               & (m.salt == p.salt), "left")
-        .drop("surface_form", "salt")
-    )

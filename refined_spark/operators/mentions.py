@@ -28,9 +28,7 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
-    ArrayType,
     IntegerType,
     StringType,
     StructField,
@@ -41,12 +39,6 @@ from ..functions.normalize import normalize_surface_form, normalize_udf
 
 _TOKEN_RE = re.compile(r"\S+")
 MAX_NGRAM = 3
-
-_SPAN_SCHEMA = ArrayType(StructType([
-    StructField("start", IntegerType()),
-    StructField("length", IntegerType()),
-    StructField("mention_text", StringType()),
-]))
 
 
 def _norm_token_cached(tok: str, cache: dict[str, str]) -> str:
@@ -133,21 +125,6 @@ def load_match_dictionary(path: str) -> tuple[set, set]:
     return v
 
 
-def make_detect_udf(spark, match_keys: list[str]):
-    """Broadcast the dictionary once; return an Arrow-batched matcher UDF."""
-    keys = {k for k in match_keys if k}
-    first_words = {k.split(" ", 1)[0] for k in keys}
-    bc = spark.sparkContext.broadcast((keys, first_words))
-
-    @pandas_udf(_SPAN_SCHEMA)
-    def detect(texts: pd.Series) -> pd.Series:
-        d, fw = bc.value
-        cache = _TOKEN_NORM_CACHE
-        return texts.map(lambda t: _match_doc(t, d, fw, cache))
-
-    return detect
-
-
 def attach_context(df: DataFrame, text_col: str = "text") -> DataFrame:
     """ctx_word = word in "(word)" immediately after the span, else NULL."""
     tail = F.substring(
@@ -193,26 +170,6 @@ def mentions_from_spans(documents: DataFrame, spans: DataFrame) -> DataFrame:
     )
 
 
-def detect_mentions(spark, documents: DataFrame,
-                    match_keys: list[str]) -> DataFrame:
-    """E2e mode: dictionary MD over extracted text.
-
-    Output schema matches :func:`mentions_from_spans`.
-    """
-    detect = make_detect_udf(spark, match_keys)
-    spans = (
-        documents.select("url", "text",
-                         F.explode(detect(F.col("text"))).alias("sp"))
-        .select("url", "text", "sp.start", "sp.length", "sp.mention_text")
-    )
-    out = attach_context(spans)
-    return (
-        out.withColumn("norm_sf", normalize_udf(F.col("mention_text")))
-        .withColumn("mention_key", mention_id_col())
-        .drop("text")
-    )
-
-
 # Java regex \w is ASCII; Python's is Unicode — pin to ASCII for parity
 # with attach_context's JVM regexp_extract.
 _CTX_RE = re.compile(r"^ \((\w+)\)", re.ASCII)
@@ -228,9 +185,8 @@ _MENTION_SCHEMA = StructType([
 ])
 
 
-def _mention_rows_runner(dict_src, from_html: bool,
-                         spec_col: str | None = None):
-    """Shared mapInPandas body: (url, html|text) batches -> mention rows.
+def _mention_rows_runner(dict_src, spec_col: str | None = None):
+    """mapInPandas body: (url, text) batches -> mention rows.
 
     dict_src: ("bc", broadcast) for a driver-broadcast key set (fixture
     scale) or ("path", parquet_path) for the executor-side artifact load
@@ -252,12 +208,12 @@ def _mention_rows_runner(dict_src, from_html: bool,
         for pdf in batches:
             urls, starts, lengths, texts_m, norms, ctxs, mkeys = (
                 [], [], [], [], [], [], [])
-            src = (pdf["html"] if from_html else pdf["text"]).tolist()
+            texts = pdf["text"].tolist()
             specs = (pdf[spec_col].tolist() if spec_col
-                     else [None] * len(src))
+                     else [None] * len(texts))
             bad = []
-            for url, payload, spec in zip(pdf["url"].tolist(), src, specs):
-                text = extract_text(payload) if from_html else (payload or "")
+            for url, text, spec in zip(pdf["url"].tolist(), texts, specs):
+                text = text or ""
                 if spec is not None and extract_text(spec) != text:
                     bad.append(url)
                 for off, ln, phrase in _match_doc(text, d, fw, tok_cache):
@@ -304,10 +260,9 @@ def detect_mention_rows(spark, documents: DataFrame,
                         text_col: str = "text",
                         dict_path: str | None = None,
                         spec_col: str | None = None) -> DataFrame:
-    """One-Arrow-crossing mention detection over an existing text column
-    (e.g. the JVM extraction output): text in, mention rows out. Same
-    output as :func:`fused_extract_detect`; use when extraction already
-    ran JVM-side so only the dictionary matcher needs Python.
+    """E2e mode: dictionary MD over an existing text column (e.g. the
+    JVM extraction output) in one Arrow crossing — text in, normalized
+    mention rows out. Output schema matches :func:`mentions_from_spans`.
 
     Pass ``dict_path`` (a parquet artifact written by
     ``pipeline.write_match_dictionary``) to load the key set executor-side
@@ -319,28 +274,8 @@ def detect_mention_rows(spark, documents: DataFrame,
     parsed by the Python spec and compared with ``text_col``; a mismatch
     fails the job (a ``PythonException`` carrying the contract message)."""
     run = _mention_rows_runner(_dict_src(spark, match_keys, dict_path),
-                               from_html=False, spec_col=spec_col)
+                               spec_col=spec_col)
     cols = [F.col(spec_col)] if spec_col else []
     return (documents.select("url", F.col(text_col).alias("text"), *cols)
             .mapInPandas(run, _MENTION_SCHEMA))
 
-
-def fused_extract_detect(spark, documents: DataFrame,
-                         match_keys: list[str] | None = None,
-                         dict_path: str | None = None) -> DataFrame:
-    """E2e fast path: html -> text -> spans -> normalized mention rows in
-    ONE Arrow crossing (`mapInPandas`), byte-equal to the composed
-    extract -> detect -> attach_context -> normalize pipeline (pinned by
-    tests/test_pipeline_parity.py).
-
-    Why: the composed path moves every document's text across the
-    JVM<->Python boundary twice and every mention once more for
-    normalization; on a memory-bandwidth-bound box that traffic — not
-    compute — dominates the pipeline front end. Here html enters, only
-    mention rows (two orders of magnitude smaller) leave, and the raw
-    corpus is never shuffled at all (scan partitions feed the UDF
-    directly; downstream stages shuffle the small mention rows by url).
-    """
-    run = _mention_rows_runner(_dict_src(spark, match_keys, dict_path),
-                               from_html=True)
-    return documents.select("url", "html").mapInPandas(run, _MENTION_SCHEMA)

@@ -12,19 +12,19 @@ Re-implements the reference's ED scoring dataflow declaratively:
   [class_overlap, pem, class_dist, desc_score]
   (entity_disambiguation_layer.py:36-119), pem==0 masked to -1e8,
   NOTA logit 0 appended, softmax.
-- F7 argmax + threshold: rank window per mention, ED threshold 0.15
-  (evaluation/evaluation.py:70-81).
+- F7 argmax + threshold: first-occurrence argmax per mention, ED
+  threshold 0.15 (evaluation/evaluation.py:70-81).
 
-Everything is Column arithmetic (WholeStageCodegen) except the mention
-embedding itself, which is a hash-embedding pandas UDF evaluated once per
-DISTINCT context word (a tiny dimension), then broadcast-joined back —
-the per-candidate dot product runs JVM-side via ``zip_with``+``aggregate``.
-
-Scale: candidates ⋈ entity_emb is the one potentially-large join; at 33M
-entities x 300 dims it exceeds broadcast range, so the join key is the
-dense ``qcode_idx`` surrogate and AQE picks SMJ/shuffled-hash
-(``broadcast_emb=False``). The windows partition by mention_key — already
-co-partitioned with the candidate shuffle.
+The features depend only on the (ctx_word, qcode) pair, so they are
+computed once per DISTINCT observed pair (:func:`pair_feature_table`) and
+collected into a broadcast map (:func:`feature_map_by_ctx`). The mention
+embedding is a hash-embedding pandas UDF evaluated once per distinct
+context word; the per-candidate dot product runs JVM-side via
+``zip_with``+``aggregate``. Logits (:func:`with_candidate_logits`) and
+links (:func:`links_from_logits`) are array expressions over each
+mention's candidate array: no shuffle of the mention table. The
+sequential replay in :mod:`refined_spark.fixtures.oracle` is the
+cross-check.
 """
 
 from __future__ import annotations
@@ -46,136 +46,6 @@ def _embed_udf(words: pd.Series) -> pd.Series:
     )
 
 
-def score_candidates(
-    candidates: DataFrame,
-    mentions: DataFrame,
-    entity: DataFrame,
-    entity_emb: DataFrame,
-    topic_class: DataFrame,
-    weights: dict[str, float],
-    broadcast_emb: bool = True,
-    typing_frame: DataFrame | None = None,
-) -> DataFrame:
-    """Returns candidates + feature columns + logit.
-
-    candidates: (url, start, qcode, prob, cand_source, cand_rank)
-    """
-    # candidates carry mention_key out of the coref aggregation (already
-    # hash-partitioned on it) — joining on mention_key instead of
-    # (url, start) lets Catalyst reuse that partitioning: only the small
-    # mentions projection shuffles.
-    m = mentions.select("ctx_word", "mention_key")
-    cand = candidates.join(m, ["mention_key"])
-
-    # The expensive features (300-dim dot product, class-set membership)
-    # depend ONLY on (ctx_word, qcode) — never on the individual mention.
-    # Mention surfaces are Zipfian, so at corpus scale the same pair
-    # recurs millions of times; evaluating array math per candidate row
-    # would redo identical work per repeat. Dedup to the distinct
-    # observed pairs (one small shuffle), run the heavy math once per
-    # pair, and hash-join the resulting SCALARS back. This is the same
-    # materialize-then-join move the reference makes for description
-    # embeddings (processor.py:525-553), one level further.
-    pairs = cand.select("ctx_word", "qcode").distinct()
-    ctx_words = (mentions.select("ctx_word")
-                 .where(F.col("ctx_word").isNotNull()).distinct())
-    pair_feats = pair_feature_table(pairs, entity, entity_emb, topic_class,
-                                    ctx_words, typing_frame=typing_frame)
-    et_mode = typing_frame is not None
-    if broadcast_emb:
-        # distinct (surface-context, entity) pairs ~ alias-table-sized
-        pair_feats = F.broadcast(pair_feats)
-
-    # left join: NULL-candidate mention rows (kept by the coref stage so
-    # links never re-join the mentions table) pass through with NULL logit
-    joined = cand.join(
-        pair_feats,
-        cand["ctx_word"].eqNullSafe(pair_feats["ctx_word"])
-        & (cand["qcode"] == pair_feats["qcode"]),
-        "left",
-    ).drop(pair_feats["ctx_word"]).drop(pair_feats["qcode"])
-
-    # summation order (class, pem, dist, desc, bias) is part of the
-    # cross-engine contract: the fixture oracle folds in the same order,
-    # so parity is bit-exact, not approximate
-    if et_mode:
-        first = F.lit(weights["class_overlap"]) * F.col("class_delta")
-        dist_term = F.lit(weights["class_dist"]) * F.col("class_dist")
-        class_cols = ["class_delta", "class_dist"]
-    else:
-        first = F.lit(weights["class_overlap"]) * F.col("class_overlap")
-        dist_term = (F.lit(weights["class_dist"])
-                     * (F.lit(1.0) - F.col("class_overlap")))
-        class_cols = ["class_overlap"]
-    logit_raw = (
-        first
-        + F.lit(weights["pem"]) * F.col("prob")
-        + dist_term
-        + F.lit(weights["desc_score"]) * F.col("desc_score")
-        + F.lit(weights["bias"])
-    )
-    logit = F.when(F.col("prob") == 0.0,
-                   F.lit(config.PEM_ZERO_MASK)).otherwise(logit_raw)
-    # url/start omitted: derivable from mention_key, and every byte in
-    # this table rides the links shuffle
-    return (
-        joined.withColumn("logit", logit)
-        .select("mention_key", "qcode", "prob", "cand_source",
-                "cand_rank", "desc_score", *class_cols, "logit")
-    )
-
-
-def extract_links(scored: DataFrame,
-                  threshold: float = config.ED_THRESHOLD) -> DataFrame:
-    """Softmax (incl. NOTA logit 0) + argmax + ED threshold per mention.
-
-    ONE hash aggregation per mention (no sort-based windows, no join back
-    to the mentions table — NULL-candidate rows flow through the scored
-    table, so every mention is present here by construction):
-    ``max_by(candidate, (logit, -cand_rank))`` is the argmax with the
-    reference's first-occurrence tie-break (candidates precede NOTA,
-    processor.py:330-334) — max_by skips rows whose ordering key is NULL,
-    which drops the no-candidate sentinel rows exactly; ``sum(exp(logit))
-    + 1`` is the softmax denominator with the NOTA term. The unshifted
-    exp is safe here: logits are bounded (|w|·|features| ≈ 10) and the
-    masks (-100 / -1e8) underflow to 0 exactly as the stable form would.
-
-    Output: (url, start, mention_key, pred_qcode NULLABLE, confidence);
-    every mention gets a row (no-candidate mentions -> NULL, conf 0.0).
-    """
-    from .candidates import start_from_mention_key, url_from_mention_key
-
-    agg = scored.groupBy("mention_key").agg(
-        F.max("logit").alias("mx"),
-        F.sum(F.exp("logit")).alias("sum_exp"),
-        F.max_by(
-            F.col("qcode"),
-            F.when(F.col("logit").isNotNull(),
-                   F.struct(F.col("logit"),
-                            (-F.col("cand_rank")).alias("nr"))),
-        ).alias("win_qcode"),
-    )
-    denom = F.col("sum_exp") + F.lit(1.0)  # + exp(0) for NOTA
-    conf_win = F.exp(F.col("mx")) / denom
-    return agg.select(
-        url_from_mention_key().alias("url"),
-        start_from_mention_key().alias("start"),
-        "mention_key",
-        # NOTA wins only when strictly greater than every candidate logit
-        F.when((F.col("mx") >= 0.0) & (conf_win >= threshold),
-               F.col("win_qcode")).alias("pred_qcode"),
-        F.coalesce(
-            F.when(F.col("mx") >= 0.0, conf_win)
-            .otherwise(F.lit(1.0) / denom),
-            F.lit(0.0),  # no candidates at all: mx NULL -> conf 0.0
-        ).alias("confidence"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Array-native scoring + linking (the production physical plan)
-# ---------------------------------------------------------------------------
-
 _CTX_NULL_KEY = "\x01"  # sentinel: group NULL ctx_word into the feature map
 
 
@@ -184,8 +54,12 @@ def pair_feature_table(pairs: DataFrame, entity: DataFrame,
                        ctx_words: DataFrame,
                        typing_frame: DataFrame | None = None) -> DataFrame:
     """(ctx_word, qcode) -> (desc_score, class features) for the DISTINCT
-    observed pairs — the heavy 300-dim math runs once per pair (see
-    score_candidates docstring for why this dedup is the scale move).
+    observed pairs. The features depend only on the pair, never on the
+    individual mention, and mention surfaces are Zipfian: at corpus scale
+    the same pair recurs millions of times, so the heavy 300-dim math
+    runs once per pair instead of once per candidate row — the
+    materialize-then-join move the reference makes for description
+    embeddings (processor.py:525-553), one level further.
 
     Class features come in two protocols:
 
@@ -356,7 +230,6 @@ def _fmap_value_fields(feature_map: DataFrame) -> list[str]:
 def with_candidate_logits(cand_df: DataFrame, entity: DataFrame,
                           entity_emb: DataFrame, topic_class: DataFrame,
                           weights: dict[str, float],
-                          pairs: DataFrame | None = None,
                           feature_map: DataFrame | None = None,
                           pair_logits: DataFrame | None = None,
                           typing_frame: DataFrame | None = None
@@ -367,13 +240,16 @@ def with_candidate_logits(cand_df: DataFrame, entity: DataFrame,
     The per-candidate linear layer (F6) evaluates as a transform() over
     the candidate array with feature lookup in a BROADCAST map keyed by
     (ctx_word -> qcode -> features): zero shuffle of the mention table.
-    The map's size is the distinct observed (ctx, qcode) pair count —
-    alias-table-scale, the same budget the reference spends on its PEM
-    dict on every worker. Escape hatch if that budget is ever exceeded:
-    the row-shaped path (:func:`score_candidates` with
-    ``broadcast_emb=False``) computes identical logits via an
-    explode + shuffle-join of the pair-feature table and stays
-    oracle-tested as the cross-check implementation.
+    Broadcast budget: the map holds one entry per distinct observed
+    (ctx_word, qcode) pair, so it scales with the alias table and the
+    context vocabulary, not with the corpus — the same budget the
+    reference spends on its PEM dict on every worker. Nothing checks
+    that budget here; a map beyond the executors' broadcast memory fails
+    the job.
+
+    ``feature_map``: a prebuilt :func:`feature_map_by_ctx` frame, shared
+    across call sites; without one the map is built from the distinct
+    (ctx_word, qcode) pairs of ``cand_df``.
 
     ``pair_logits`` (round-2 scale move): a broadcast
     (norm_sf, ctx_word) -> logits table precomputed on the DISTINCT
@@ -384,11 +260,9 @@ def with_candidate_logits(cand_df: DataFrame, entity: DataFrame,
     is mention-specific). Requires cand_df to carry norm_sf + has_coref.
     """
     if feature_map is None:
-        if pairs is None:
-            pairs = (cand_df.select("ctx_word",
-                                    F.explode("cand_arr").alias("c"))
-                     .select("ctx_word", F.col("c.qcode").alias("qcode"))
-                     .distinct())
+        pairs = (cand_df.select("ctx_word", F.explode("cand_arr").alias("c"))
+                 .select("ctx_word", F.col("c.qcode").alias("qcode"))
+                 .distinct())
         feature_map = feature_map_by_ctx(pairs, entity, entity_emb,
                                          topic_class,
                                          typing_frame=typing_frame)
@@ -400,8 +274,8 @@ def with_candidate_logits(cand_df: DataFrame, entity: DataFrame,
         F.coalesce(cand_df["ctx_word"], F.lit(_CTX_NULL_KEY))
         == feature_map["ctx_key"], "left").drop("ctx_key")
     w = weights
-    # summation order (class, pem, dist, desc, bias) matches the row
-    # path and the fixture oracle's fold — bit-exact cross-path parity
+    # summation order (class, pem, dist, desc, bias) matches the fixture
+    # oracle's fold
     if et_mode:
         # ET protocol: same linear mix, with the reference ED layer's
         # real class features — delta (prior-mode 'class_overlap' weight

@@ -161,7 +161,6 @@ def run_pipeline(
     fixture_dir: str,
     mode: str = "spans",
     broadcast_pem: bool = True,
-    broadcast_emb: bool = True,
     dict_dir: str | None = None,
     documents: DataFrame | None = None,
     gold_spans: DataFrame | None = None,

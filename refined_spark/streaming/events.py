@@ -156,7 +156,7 @@ def streaming_mentions(spark, documents_path: str, match_keys: list[str],
     """Incremental mention detection over a parquet-file stream of
     input_hint-shaped documents. Stateless → no watermark needed."""
     from ..operators.extract import with_extracted_text
-    from ..operators.mentions import detect_mentions
+    from ..operators.mentions import detect_mention_rows
 
     stream = (
         spark.readStream.schema(schema).format("parquet")
@@ -165,4 +165,4 @@ def streaming_mentions(spark, documents_path: str, match_keys: list[str],
     )
     docs = with_extracted_text(stream).withColumn(
         "text", F.col("extracted")).drop("extracted")
-    return detect_mentions(spark, docs, match_keys)
+    return detect_mention_rows(spark, docs, match_keys)

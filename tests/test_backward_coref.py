@@ -4,22 +4,18 @@ every strong human name, so a receiver with no registration BEFORE it
 falls back to the document's LAST registration; wherever an earlier
 registration exists, pass-2 overwrites restore forward semantics.
 
-Three independent implementations must agree: the array-native production
-plan, the row-shaped declarative plan, and the sequential pandas replay —
-plus the fixture oracle parquet (a fourth, NumPy-side replay)."""
+The array-native production plan is checked against the fixture oracle
+parquet (the sequential NumPy-side replay, fixtures/oracle.py) in both
+directions, and against a hand case."""
 
 import os
 
-import pyspark.sql.functions as F
 import pytest
 
 from refined_spark.operators.candidates import (
-    direct_candidates,
     explode_candidate_arrays,
     mention_candidate_arrays,
     pem_surface_arrays,
-    with_person_coref,
-    with_person_coref_python,
 )
 from refined_spark.operators.mentions import mentions_from_spans
 
@@ -34,8 +30,7 @@ def world(spark, fx_t1):
     entity = spark.read.parquet(os.path.join(fx_t1, "entity.parquet"))
     mentions = mentions_from_spans(docs, spans).cache()
     mentions.count()
-    return dict(mentions=mentions, pem=pem, entity=entity,
-                arrays=pem_surface_arrays(pem, entity))
+    return dict(mentions=mentions, arrays=pem_surface_arrays(pem, entity))
 
 
 def _arr_rows(arr_df):
@@ -52,7 +47,7 @@ def _exp_rows(spark, fx, name):
 def test_backward_matches_oracle_fixture(spark, fx_t1, world):
     got = _arr_rows(mention_candidate_arrays(
         world["mentions"], world["arrays"], backward=True))
-    assert got == _exp_rows(spark, fx_t1, "expected_candidates_back")
+    assert got and got == _exp_rows(spark, fx_t1, "expected_candidates_back")
 
 
 def test_forward_matches_oracle_and_differs(spark, fx_t1, world):
@@ -63,20 +58,6 @@ def test_forward_matches_oracle_and_differs(spark, fx_t1, world):
     assert got == want_fwd
     # non-vacuity: the corpus actually discriminates the two protocols
     assert want_fwd != want_back
-
-
-def test_three_backward_implementations_agree(spark, world):
-    arr = _arr_rows(mention_candidate_arrays(
-        world["mentions"], world["arrays"], backward=True))
-    direct = direct_candidates(world["mentions"], world["pem"],
-                               world["entity"])
-    row = {tuple(r) for r in
-           with_person_coref(direct, mentions=world["mentions"],
-                             backward=True)
-           .where("qcode is not null").select(COLS).collect()}
-    seq = {tuple(r) for r in with_person_coref_python(direct, backward=True)
-           .where("qcode is not null").select(COLS).collect()}
-    assert arr == row == seq and arr
 
 
 def test_backward_hand_case(spark, fx_t1, world):

@@ -1,13 +1,12 @@
 """M6 LSH blocking + skew salting."""
 
-import pyspark.sql.functions as F
-
 from refined_spark.operators.blocking import (
     hot_keys,
     lsh_mention_pairs,
-    salted_candidate_join,
+    salted_array_join,
     with_block_keys,
 )
+from refined_spark.operators.candidates import pem_surface_arrays
 
 
 def _mentions(spark, rows):
@@ -38,18 +37,22 @@ def test_lsh_near_surfaces_share_some_band(spark):
 
 def test_hot_key_census_and_salted_join(spark, fx_t1):
     pem = spark.read.parquet(f"{fx_t1}/pem.parquet")
+    entity = spark.read.parquet(f"{fx_t1}/entity.parquet")
     rows = [(f"m{i:04d}", "acme") for i in range(50)]
     rows += [(f"r{i:04d}", "jaguar") for i in range(3)]
     m = _mentions(spark, rows)
     hot = hot_keys(m, "norm_sf", threshold=10)
     assert [r["norm_sf"] for r in hot.collect()] == ["acme"]
 
-    salted = salted_candidate_join(m, pem, hot, buckets=4)
-    plain = m.join(pem, m.norm_sf == pem.surface_form, "left") \
-        .drop("surface_form")
-    got = {(r["mention_key"], r["qcode"]) for r in salted.collect()}
-    want = {(r["mention_key"], r["qcode"]) for r in plain.collect()}
-    assert got == want  # salting never changes join semantics
+    pem_arrays = pem_surface_arrays(pem, entity)
+    salted = salted_array_join(m, pem_arrays, hot, buckets=4)
+    plain = m.join(pem_arrays, m.norm_sf == pem_arrays.surface_form,
+                   "left").drop("surface_form")
+    got = {(r["mention_key"], tuple(c["qcode"] for c in r["pem_arr"]))
+           for r in salted.collect()}
+    want = {(r["mention_key"], tuple(c["qcode"] for c in r["pem_arr"]))
+            for r in plain.collect()}
+    assert got == want and len(got) == 53  # salting never changes the join
 
 
 def test_salted_array_join_with_forced_hot_key(spark):

@@ -86,61 +86,29 @@ def test_sparse_distance_identity(spark, fx_t1):
 
 def test_et_links_match_fixture_replay(spark, fx_t1):
     """run_pipeline(typing_mode='et') reproduces the independently
-    generated expected_links_et table exactly — and that table provably
-    differs from prior-mode links (asserted at generation time)."""
+    generated expected_links_et table — predictions exactly, confidences
+    within fp tolerance, with the prebuilt feature map — and that table
+    provably differs from prior-mode links (asserted at generation
+    time)."""
     from refined_spark.pipeline import run_pipeline
 
     res = run_pipeline(spark, fx_t1, typing_mode="et")
-    got = {(r["url"], r["start"]): r["pred_qcode"]
+    got = {(r["url"], r["start"]): (r["pred_qcode"], r["confidence"])
            for r in res["links"].collect()}
     exp = pd.read_parquet(os.path.join(fx_t1, "expected_links_et.parquet"))
     assert len(got) == len(exp)
     for _, row in exp.iterrows():
-        assert got[(row["url"], row["start"])] == (
+        pred, conf = got[(row["url"], row["start"])]
+        assert pred == (
             row["pred_qcode"] if pd.notna(row["pred_qcode"]) else None), \
+            (row["url"], row["start"])
+        assert conf == pytest.approx(row["confidence"], abs=1e-9), \
             (row["url"], row["start"])
     prior = pd.read_parquet(os.path.join(fx_t1, "expected_links.parquet"))
     merged = exp.merge(prior, on=["url", "start"], suffixes=("_et", "_p"))
     assert (merged["pred_qcode_et"].fillna("∅")
             != merged["pred_qcode_p"].fillna("∅")).any()
     res["unpersist"]()
-
-
-def test_et_row_path_parity(spark, fx_t1):
-    """score_candidates(typing_frame=...) row path == the fmap transform
-    path, logit for logit (the same cross-check the prior mode has)."""
-    from refined_spark.operators.candidates import (
-        explode_candidate_arrays, mention_candidate_arrays,
-        pem_surface_arrays)
-    from refined_spark.operators.mentions import mentions_from_spans
-    from refined_spark.operators.extract import with_extracted_text
-    from refined_spark.operators.scoring import (
-        explode_scored_arrays, score_candidates, with_candidate_logits)
-    from refined_spark.pipeline import load_tables, load_weights
-
-    t = load_tables(spark, fx_t1)
-    names = _names(spark, fx_t1)
-    docs = with_extracted_text(t["documents"]).select(
-        "url", F.col("extracted").alias("text"))
-    mentions = mentions_from_spans(docs, t["gold_spans"]).persist()
-    pem_arrays = pem_surface_arrays(t["pem"], t["entity"])
-    cand_arr = mention_candidate_arrays(mentions, pem_arrays)
-    tf = et_confidence_table(mentions.select("ctx_word"), names)
-    weights = load_weights(t["ed_weights"])
-
-    arr = explode_scored_arrays(with_candidate_logits(
-        cand_arr, t["entity"], t["entity_emb"], t["topic_class"], weights,
-        typing_frame=tf)).select("mention_key", "qcode", "logit")
-    rows = score_candidates(
-        explode_candidate_arrays(cand_arr).where(F.col("qcode").isNotNull()),
-        mentions, t["entity"], t["entity_emb"], t["topic_class"], weights,
-        typing_frame=tf).select("mention_key", "qcode", "logit")
-    a = {(r["mention_key"], r["qcode"]): r["logit"] for r in arr.collect()}
-    b = {(r["mention_key"], r["qcode"]): r["logit"] for r in rows.collect()}
-    assert a and set(a) == set(b)
-    for k, v in a.items():
-        assert v == pytest.approx(b[k], abs=1e-12), k
-    mentions.unpersist()
 
 
 def test_et_top_classes_matches_expected(spark, fx_t1):
@@ -171,13 +139,20 @@ def test_typing_mode_folds_into_checkpoint_fingerprint(spark, fx_t1,
                                     typing_mode="et")
     assert "links" in out["runner"].stages_run
     links = spark.read.parquet(os.path.join(run_dir, "links", "data")) \
-        .select("url", "start", "pred_qcode").collect()
+        .select("url", "start", "pred_qcode", "confidence").collect()
     exp = pd.read_parquet(os.path.join(fx_t1, "expected_links_et.parquet"))
     exp_map = {(r["url"], r["start"]):
                (r["pred_qcode"] if pd.notna(r["pred_qcode"]) else None)
                for _, r in exp.iterrows()}
     got_map = {(r["url"], r["start"]): r["pred_qcode"] for r in links}
     assert got_map == exp_map
+    # the links stage builds its feature map from the candidate arrays
+    # (no prebuilt map), the other logits path
+    exp_conf = {(r["url"], r["start"]): r["confidence"]
+                for _, r in exp.iterrows()}
+    for r in links:
+        assert r["confidence"] == pytest.approx(
+            exp_conf[(r["url"], r["start"])], abs=1e-9), (r["url"], r["start"])
 
 
 def test_bad_typing_mode_raises(spark, fx_t1):

@@ -63,101 +63,70 @@ def test_pairwise_f1_gate(spark, fx_t2):
 
 
 def test_e2e_mode_finds_matchable_mentions(spark, fx_t1):
+    """Dictionary MD (JVM extraction + one Arrow crossing) detects
+    exactly the dict-matchable gold spans, with their text and context
+    word, and normalizes each surface like the Python spec."""
+    from refined_spark.functions.normalize import normalize_surface_form
+
     res = run_pipeline(spark, fx_t1, mode="e2e")
+    cols = ["url", "start", "length", "mention_text", "ctx_word"]
+    rows = res["mentions"].select(*cols, "norm_sf").collect()
+    res["unpersist"]()
     gold = spark.read.parquet(os.path.join(fx_t1, "gold_spans.parquet"))
-    got = {(r["url"], r["start"], r["length"])
-           for r in res["mentions"].collect()}
-    want = {(r["url"], r["start"], r["length"])
-            for r in gold.where("dict_matchable").collect()}
-    assert got == want
+    want = {tuple(r) for r in gold.where("dict_matchable").select(*cols)
+            .collect()}
+    assert {tuple(r[c] for c in cols) for r in rows} == want
+    for r in rows:
+        assert r["norm_sf"] == normalize_surface_form(r["mention_text"]), r
 
-def test_fused_detect_equals_composed_path(spark, fx_t1):
-    """fused_extract_detect (one Arrow crossing) must be row-identical to
-    extract -> detect_mentions -> attach_context -> normalize."""
-    import pyspark.sql.functions as F
 
-    from refined_spark.operators.extract import with_extracted_text
-    from refined_spark.operators.mentions import (
-        detect_mentions,
-        fused_extract_detect,
-    )
-    from refined_spark.pipeline import load_tables, match_dictionary
+def _pylist(fx, name):
+    import pyarrow.parquet as pq
 
-    t = load_tables(spark, fx_t1)
-    keys = match_dictionary(t["pem"], t["entity"])
-    docs = with_extracted_text(t["documents"]).withColumn(
-        "text", F.col("extracted")).drop("extracted")
-    composed = {tuple(r) for r in detect_mentions(spark, docs, keys)
-                .select("url", "start", "length", "mention_text", "norm_sf",
-                        "ctx_word", "mention_key").collect()}
-    fused = {tuple(r) for r in fused_extract_detect(
-        spark, t["documents"], keys)
-        .select("url", "start", "length", "mention_text", "norm_sf",
-                "ctx_word", "mention_key").collect()}
-    assert fused == composed
+    return pq.read_table(os.path.join(fx, f"{name}.parquet")).to_pylist()
 
-def test_array_path_equals_row_path(spark, fx_t2):
-    """The array-native production plan and the row-based cross-check
-    implementations must agree row-for-row (candidates) and on every
-    prediction (links) — same semantics, different physical plans."""
-    import pyspark.sql.functions as F
 
-    from refined_spark.operators.candidates import (
-        direct_candidates,
-        explode_candidate_arrays,
-        mention_candidate_arrays,
-        pem_surface_arrays,
-        with_person_coref,
-    )
-    from refined_spark.operators.extract import extracted_text_col
-    from refined_spark.operators.mentions import detect_mention_rows
-    from refined_spark.operators.scoring import (
-        extract_links,
-        links_from_logits,
-        score_candidates,
-        with_candidate_logits,
-    )
-    from refined_spark.pipeline import (
-        load_tables,
-        load_weights,
-        match_dictionary,
-    )
+def test_e2e_plan_matches_oracle_on_detected_mentions(spark, fx_t2):
+    """The production e2e plan's candidates and links on the mentions it
+    detected equal the sequential NumPy oracle (fixtures/oracle.py) run
+    over those same mentions: every candidate row exactly, every
+    prediction exactly, confidences within fp tolerance. Links are
+    checked on both logits paths: the pipeline's prebuilt feature map
+    with pair logits, and the map built from the candidate arrays."""
+    from refined_spark.fixtures.oracle import run_oracle
+    from refined_spark.operators.scoring import (links_from_logits,
+                                                 with_candidate_logits)
+    from refined_spark.pipeline import load_weights
 
-    t = load_tables(spark, fx_t2)
-    docs = t["documents"].withColumn("text", extracted_text_col("html"))
-    mentions = detect_mention_rows(
-        spark, docs, match_dictionary(t["pem"], t["entity"])).cache()
+    res = run_pipeline(spark, fx_t2, mode="e2e")
+    t = res["tables"]
+    spans = [r.asDict() for r in res["mentions"].select(
+        "url", "start", "length", "mention_text", "ctx_word").collect()]
+    cand_cols = ["url", "start", "qcode", "prob", "cand_source", "cand_rank"]
+    got_cands = {tuple(r) for r in res["candidates"].select(cand_cols)
+                 .collect()}
+    unshared = links_from_logits(with_candidate_logits(
+        res["cand_arr"], t["entity"], t["entity_emb"], t["topic_class"],
+        load_weights(t["ed_weights"])))
+    got_links = [{(r["url"], r["start"]): (r["pred_qcode"], r["confidence"])
+                  for r in links.collect()}
+                 for links in (res["links"], unshared)]
+    res["unpersist"]()
 
-    arr = mention_candidate_arrays(
-        mentions, pem_surface_arrays(t["pem"], t["entity"]))
-    cand_a = explode_candidate_arrays(arr).where("qcode is not null")
-    cand_r = with_person_coref(
-        direct_candidates(mentions, t["pem"], t["entity"]),
-        mentions=mentions).where("qcode is not null")
-    cols = ["mention_key", "qcode", "prob", "cand_source", "cand_rank"]
-    a = {tuple(r) for r in cand_a.select(cols).collect()}
-    b = {tuple(r) for r in cand_r.select(cols).collect()}
-    assert a == b
-
-    weights = load_weights(t["ed_weights"])
-    links_a = links_from_logits(with_candidate_logits(
-        arr, t["entity"], t["entity_emb"], t["topic_class"], weights))
-    # row path needs the NULL-sentinel rows for no-candidate mentions
-    cand_all = with_person_coref(
-        direct_candidates(mentions, t["pem"], t["entity"]),
-        mentions=mentions)
-    links_r = extract_links(score_candidates(
-        cand_all, mentions, t["entity"], t["entity_emb"],
-        t["topic_class"], weights))
-    la = {(r["mention_key"], r["pred_qcode"], round(r["confidence"], 9))
-          for r in links_a.collect()}
-    lr = {(r["mention_key"], r["pred_qcode"], round(r["confidence"], 9))
-          for r in links_r.collect()}
-    assert {x[:2] for x in la} == {x[:2] for x in lr}
-    # confidences equal within fp tolerance (different summation shapes)
-    da = dict((x[0], x[2]) for x in la)
-    for k, v in ((x[0], x[2]) for x in lr):
-        assert abs(da[k] - v) < 1e-6, k
+    cand_out, link_out, _clusters = run_oracle(
+        [], spans, _pylist(fx_t2, "pem"), _pylist(fx_t2, "entity"),
+        _pylist(fx_t2, "entity_emb"), _pylist(fx_t2, "ed_weights"),
+        _pylist(fx_t2, "topic_class"))
+    assert len(spans) > 1000 and len(cand_out) > len(spans)
+    assert any(c["cand_source"] == "coref" for c in cand_out)
+    assert got_cands == {tuple(c[k] for k in cand_cols) for c in cand_out}
+    assert len(link_out) == len(spans)
+    for got in got_links:
+        assert len(got) == len(link_out)
+        for r in link_out:
+            pred, conf = got[(r["url"], r["start"])]
+            assert pred == r["pred_qcode"], r
+            assert abs(conf - r["confidence"]) < 1e-9, r
 
 
 def test_salted_nonbroadcast_equals_broadcast(spark, fx_t2):
