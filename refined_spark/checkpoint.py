@@ -230,9 +230,11 @@ def run_pipeline_checkpointed(
     from .operators.extract import extracted_text_col, with_extracted_text
     from .operators.mentions import detect_mention_rows, mentions_from_spans
     from .operators.scoring import links_from_logits, with_candidate_logits
-    from .pipeline import (fixture_content_stamp, load_tables,
-                           load_weights, write_match_dictionary)
+    from .pipeline import (check_protocol, fixture_content_stamp,
+                           load_tables, load_weights, write_match_dictionary)
 
+    # before the runner makes run_dir: a bad protocol writes no stage
+    check_protocol(mode, typing_mode)
     t = load_tables(spark, fixture_dir)
     # the fingerprint covers fixture CONTENT (generator stamps), not
     # just the path: regenerating fixtures in place must dirty every
@@ -286,9 +288,6 @@ def run_pipeline_checkpointed(
                 class_vocab_from_edges(t["class_edges"]))
             typing_frame = et_confidence_table(
                 candidates.select("ctx_word"), names)
-        elif typing_mode != "prior":
-            raise ValueError(f"typing_mode must be prior|et, "
-                             f"got {typing_mode!r}")
         return links_from_logits(
             with_candidate_logits(candidates, t["entity"],
                                   t["entity_emb"], t["topic_class"],

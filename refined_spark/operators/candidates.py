@@ -12,9 +12,10 @@ M3 (person coreference) is the engine's single order-sensitive operator:
 the reference threads a per-document dict through mentions in start order
 (candidate_generator.py:56-94, reset per doc at refined_model.py:440-454 —
 fragile there, exact here). :func:`mention_candidate_arrays` states that
-protocol relationally: a (url, word) join of single-word receivers against
-the registrations of multi-word human surfaces, then one aggregation that
-picks the latest registration per receiver.
+protocol relationally and doc-locally: the mention rows are hash-
+partitioned on url once, and a (url, word) window ordered by start hands
+each single-word receiver the latest registration of a multi-word human
+surface before it — no further exchange.
 
 M4 (dedup keep-max-prob by qcode) happens in-row on the merged array,
 matching the reference's stable sorted-merge + unique()
@@ -28,12 +29,13 @@ broadcast path is immune (no shuffle of the big side); with
 ``broadcast_pem=False`` the attach runs through
 :func:`~.blocking.salted_array_join`, which splits hot surfaces
 SKEW_SALT_BUCKETS ways, and AQE skew-join splitting backstops residual
-imbalance.
+imbalance. Hot shared surnames do not skew coref: its only exchange is
+keyed on url, and a hot word is one window partition per document.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config
@@ -111,47 +113,56 @@ def mention_candidate_arrays(mentions: DataFrame, pem_arrays: DataFrame,
                              backward: bool = False) -> DataFrame:
     """M2+M3+M4 with array-native physics.
 
+    Coref is doc-local, so the mention rows are hash-partitioned on url
+    ONCE (``REPARTITION_BY_NUM`` at ``defaultParallelism``: AQE does not
+    coalesce it, so the heavy per-row candidate/logit math downstream
+    keeps core width) and coref resolves inside each partition:
+
+    - every mention emits a "self" row keyed by its own ``norm_sf``, and
+      a registering mention (multi-word, with a strong human candidate)
+      one more row per distinct word carrying its capped short-name
+      candidates;
+    - a window ``PARTITION BY (url, word) ORDER BY start`` takes the
+      latest registration strictly before each self row
+      (``last(shorts, ignorenulls)`` over ``UNBOUNDED PRECEDING .. 1
+      PRECEDING``). Hash partitioning on url satisfies the window's
+      clustering on (url, word), so it adds no exchange. A multi-word
+      self row never meets a registration: its key holds a space and a
+      registered word does not.
+
     ``backward=True``: the reference's 2-pass coref protocol
     (candidate_generator.py:123-159) — a receiver with no registration
-    before it takes the document's LAST registration instead of nothing.
-    Same two narrow shuffles; the join just keeps all (url, word)
-    registration rows and the pick becomes
-    coalesce(latest-before-receiver, latest-overall).
+    before it takes the document's LAST registration instead of nothing:
+    the same window, coalesced with the partition-wide last value.
 
-    Output: (mention_key, ctx_word, cand_arr) — one row PER MENTION, the
-    final merged/deduped/top-30 candidate list in rank order.
+    Output: (mention_key, norm_sf, ctx_word, has_coref, cand_arr) — one
+    row PER MENTION, the final merged/deduped/top-30 candidate list in
+    rank order.
 
-    Shuffle census (the point of this plan):
-    - multi-word mentions: ZERO shuffles — candidates attach via the
-      broadcast alias-array join and merge in-row;
-    - single-word mentions (the only possible coref receivers): exactly
-      two narrow shuffles — the (url, word) registration join and the
-      latest-registration aggregation — carrying only
-      (mention_key, norm_sf, ctx_word); their candidate arrays re-attach
-      from the broadcast afterwards;
-    - registrations are the small filtered subset of strong human
-      multi-word mentions, exploded per word."""
+    Shuffle census (the point of this plan): exactly one exchange of
+    mention rows, the url repartition, carrying key-width rows; the
+    alias arrays attach after it through the broadcast join, which keeps
+    the url partitioning. With ``broadcast_pem=False`` the alias arrays
+    attach first, through the skew-salted shuffle join on
+    (norm_sf, salt), and the url repartition follows it."""
     m = mentions.select("url", "start", "norm_sf", "ctx_word",
                         "mention_key")
+    n_parts = mentions.sparkSession.sparkContext.defaultParallelism
     if broadcast_pem:
-        src = F.broadcast(pem_arrays)
-
-        def attach(df):
-            return df.join(src, df.norm_sf == pem_arrays.surface_form,
-                           "left").drop("surface_form")
+        by_url = m.repartition(n_parts, "url")
+        direct = by_url.join(
+            F.broadcast(pem_arrays),
+            by_url.norm_sf == pem_arrays.surface_form, "left",
+        ).drop("surface_form")
     else:
         # alias table beyond broadcast range: skew-salted shuffle join
         # (mention surfaces are Zipfian — an unsalted shuffle join sends
-        # every "john" mention to one reduce task). One cheap count
-        # pre-pass finds the hot surfaces; both attach sites share it.
+        # every "john" mention to one reduce task); one cheap count
+        # pre-pass finds the hot surfaces
         from .blocking import hot_keys, salted_array_join
 
-        hot = hot_keys(m, "norm_sf")
-
-        def attach(df):
-            return salted_array_join(df, pem_arrays, hot)
-
-    direct = attach(m)
+        direct = salted_array_join(
+            m, pem_arrays, hot_keys(m, "norm_sf")).repartition(n_parts, "url")
 
     minp = config.PERSON_COREF_PEM_MIN
     cap = config.PERSON_COREF_PEM_CAP
@@ -160,49 +171,32 @@ def mention_candidate_arrays(mentions: DataFrame, pem_arrays: DataFrame,
         f" c -> struct(c.rank as rank, c.qcode as qcode,"
         f" least(c.prob, cast({cap} as double)) as prob,"
         f" c.is_human as is_human))")
-    registering = direct.where(
-        F.col("norm_sf").contains(" ")
-        & F.expr(f"exists(coalesce(pem_arr, array()),"
-                 f" c -> c.is_human AND c.prob > {minp})"))
-    reg = registering.select(
-        F.col("url").alias("r_url"),
-        F.col("start").alias("start_reg"),
-        F.explode(F.split("norm_sf", " ")).alias("word"),
-        shorts.alias("shorts"),
-    )
+    # a registering mention: multi-word, with a strong human candidate
+    registering = F.col("norm_sf").contains(" ") & (F.size(shorts) > 0)
+    keys = F.concat(
+        F.array(F.struct(F.col("norm_sf").alias("word"),
+                         F.lit(True).alias("is_self"))),
+        F.when(registering, F.transform(
+            F.array_distinct(F.split("norm_sf", " ")),
+            lambda w: F.struct(w.alias("word"),
+                               F.lit(False).alias("is_self"))))
+        .otherwise(F.array()))
+    rows = direct.select("mention_key", "url", "start", "norm_sf",
+                         "ctx_word", "pem_arr", F.inline(keys))
 
-    single = direct.where(~F.col("norm_sf").contains(" ")).select(
-        "mention_key", "url", "start", "norm_sf", "ctx_word")
-    join_cond = (single.url == reg.r_url) & (single.norm_sf == reg.word)
-    if not backward:
-        join_cond = join_cond & (reg.start_reg < single.start)
-    joined = single.join(reg, join_cond, "left")
+    w = Window.partitionBy("url", "word").orderBy("start")
+    reg_shorts = F.when(~F.col("is_self"), shorts)
+    pick = F.last(reg_shorts, ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, -1))
     if backward:
-        before = F.col("start_reg") < F.col("start")
-        pick = F.coalesce(
-            # latest registration before the receiver (pass-2 overwrite)
-            F.max_by(F.when(before, F.col("shorts")),
-                     F.when(before, F.col("start_reg"))),
-            # else the document's last registration (pre-pass residue)
-            F.max_by("shorts", "start_reg"),
-        )
-    else:
-        pick = F.max_by("shorts", "start_reg")
-    latest = joined.groupBy("mention_key").agg(
-        F.first("norm_sf").alias("norm_sf"),
-        F.first("ctx_word").alias("ctx_word"),
+        pick = F.coalesce(pick, F.last(reg_shorts, ignorenulls=True).over(
+            w.rowsBetween(Window.unboundedPreceding,
+                          Window.unboundedFollowing)))
+    resolved = rows.select(
+        "mention_key", "norm_sf", "ctx_word", "pem_arr", "is_self",
         pick.alias("coref_arr"),
-    )
-    single_full = attach(latest).select(
-        "mention_key", "norm_sf", "ctx_word", "pem_arr", "coref_arr")
-
-    multi = direct.where(F.col("norm_sf").contains(" ")).select(
-        "mention_key", "norm_sf", "ctx_word", "pem_arr",
-        F.lit(None).cast(
-            "array<struct<rank:int,qcode:string,prob:double,"
-            "is_human:boolean>>").alias("coref_arr"))
-
-    return _merge_rank_arrays(single_full.unionByName(multi))
+    ).where("is_self").drop("is_self")
+    return _merge_rank_arrays(resolved)
 
 
 def pair_candidate_arrays(surf_ctx: DataFrame,

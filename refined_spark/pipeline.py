@@ -4,18 +4,28 @@ links → transitive clusters.
 Stage graph (per SURVEY.md §3.1's Spark restatement):
 
   documents ──extract(E1, map)──┐
-  gold_spans ──────────────────mentions(M1) ──⋈ broadcast pem (M2/blocking)
-      └─ groupBy(url) coref (M3/M4) ─ candidates
+  gold_spans ──────────────────mentions(M1) ── repartition(url)
+      ⋈ broadcast alias arrays (M2/blocking)
+      → (url, word) window coref (M3) → in-row merge (M4) ─ candidates
   candidates ⋈ entity ⋈ entity_emb ⋈ topic_class → scores (F3-F6, codegen)
-      → window argmax + threshold (F7) → links
-      → large-star/small-star CC (A9) → clusters
+      → in-row argmax + threshold (F7) → links
+      → large-star/small-star CC over pair edges (A9) + cluster-id
+        window → clusters
 
 Shuffle census at scale (the thing that matters at 100 TB):
-  1. mentions⋈documents + groupBy(url) coref: ONE hash shuffle on url.
-  2. candidate scoring joins: broadcast (dims) — zero shuffle — or
-     qcode_idx shuffle when the embedding table exceeds broadcast range.
-  3. per-mention windows: shuffle on mention_key.
-  4. CC: one groupBy per star round (log-bounded; 2-3 on ER graphs).
+  1. mentions: spans mode joins gold_spans ⋈ documents on url; e2e mode
+     detects mentions map-side on the scan partitions (no shuffle).
+  2. candidates: ONE hash shuffle of key-width mention rows on url
+     (REPARTITION_BY_NUM, which AQE does not coalesce); person coref is
+     a (url, word) window inside those partitions, and the alias arrays
+     attach through a broadcast join after it. The alias arrays
+     themselves come from one groupBy(surface_form) over the pem rows.
+  3. scoring and links: map stages over broadcast vocabulary tables
+     (feature map, pair logits); their only shuffles build those tables
+     from the distinct (surface, ctx) pairs.
+  4. clusters: one window shuffle on the component without pair edges;
+     with them, one groupBy per star round on the entity-contracted
+     graph (log-bounded; 2-3 on ER graphs).
 Filters/column pruning reach the parquet scan (only url/html/text/lang are
 read; `html` only when extraction runs).
 """
@@ -156,6 +166,17 @@ def _default_dict_dir(fixture_dir: str) -> str:
                         fixture_content_stamp(fixture_dir)[:16])
 
 
+def check_protocol(mode: str, typing_mode: str) -> None:
+    """Reject an unknown ``mode`` or ``typing_mode`` before any work:
+    both fold into the checkpoint fingerprint, and an unknown ``mode``
+    would otherwise run the e2e branch under its own fingerprint."""
+    if mode not in ("spans", "e2e"):
+        raise ValueError(f"mode must be spans|e2e, got {mode!r}")
+    if typing_mode not in ("prior", "et"):
+        raise ValueError(f"typing_mode must be prior|et, "
+                         f"got {typing_mode!r}")
+
+
 def run_pipeline(
     spark: SparkSession,
     fixture_dir: str,
@@ -204,6 +225,7 @@ def run_pipeline(
     result's life: it releases the caches and the checkpoints, after
     which frames derived from the result fail instead of recomputing.
     """
+    check_protocol(mode, typing_mode)
     t = load_tables(spark, fixture_dir)
     # the API facade (api.RefinedSpark) processes caller-supplied corpora
     # against the fixture_dir's RESOURCE tables (pem/entity/embeddings…)
@@ -222,10 +244,6 @@ def run_pipeline(
     elif emb_precision != "fp32":
         raise ValueError(f"emb_precision must be fp32|fp16, "
                          f"got {emb_precision!r}")
-    # checked before any barrier, so a bad argument strands no cache
-    if typing_mode not in ("prior", "et"):
-        raise ValueError(f"typing_mode must be prior|et, "
-                         f"got {typing_mode!r}")
 
     # Default-on sampled extraction-contract guard: the JVM extractor is
     # byte-identical to the Python parser spec only on the corpus HTML
@@ -291,11 +309,10 @@ def run_pipeline(
         raise
     surf_ctx.count()
     # Array-native candidate/scoring path: one row per mention carrying
-    # its merged candidate ARRAY. Multi-word mentions never shuffle;
-    # single-word mentions shuffle twice (coref join + latest-reg agg)
-    # with key-width rows; scoring + linking are pure map stages over
-    # broadcast vocabulary tables. First full-table shuffle of the whole
-    # job is the final cluster aggregation.
+    # its merged candidate ARRAY. The mention rows shuffle once, on url
+    # (doc-local coref); scoring + linking are pure map stages over
+    # broadcast vocabulary tables; the cluster-id window is the last
+    # doc-scale shuffle.
     ckpts: list = []        # RDDs of the vocabulary-scale checkpoints
     pem_arrays = local_checkpoint(
         pem_surface_arrays(t["pem"], t["entity"]), ckpts)
@@ -345,9 +362,8 @@ def run_pipeline(
         F.col("qcode").isNotNull())
     scored = explode_scored_arrays(with_logits)
     links = links_from_logits(with_logits).persist()
-    # same barrier: cluster_mentions joins two subtrees (members x
-    # cluster ids) that BOTH read links — cold, they'd recompute the
-    # scoring pass twice in concurrent stages
+    # same barrier: callers read links next to clusters, so the scoring
+    # pass runs once, here
     links.count()
     clusters = cluster_mentions(links)
 

@@ -1,10 +1,17 @@
 """A10 — resumable checkpointed pipeline: manifests, lineage, resume."""
 
+import hashlib
+import importlib.util
 import json
 import os
 import shutil
 
+import pytest
+
 from refined_spark.checkpoint import run_pipeline_checkpointed
+from refined_spark.footers import read_parquet
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_checkpoint_run_and_resume(spark, fx_t1, tmp_path_factory):
@@ -210,3 +217,49 @@ def test_stage_restores_caller_job_group(spark, tmp_path_factory):
     finally:
         for k in props:
             sc.setLocalProperty(k, None)
+
+
+@pytest.mark.parametrize("bad", [dict(mode="span"),
+                                 dict(typing_mode="bogus")])
+def test_bad_protocol_raises_before_any_stage(spark, fx_t1, tmp_path, bad):
+    """A misspelt mode or typing mode is rejected at entry: no stage runs
+    a job and the run_dir is never made (the typing mode used to be
+    checked only in the links stage, after two stages were written)."""
+    run_dir = str(tmp_path / "run")
+    group = "refined_spark:" + hashlib.sha256(
+        os.path.abspath(run_dir).encode()).hexdigest()[:12]
+    with pytest.raises(ValueError, match=next(iter(bad))):
+        run_pipeline_checkpointed(spark, fx_t1, run_dir, **bad)
+    assert not os.path.exists(run_dir)
+    assert not spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+
+
+def _run_job_module():
+    spec = importlib.util.spec_from_file_location(
+        "run_job", os.path.join(REPO, "tools", "run_job.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_run_job_e2e_matches_in_memory(spark, fx_t1, tmp_path):
+    """The production job runs dictionary MD with --mode=e2e, and its
+    clusters equal the in-memory e2e pipeline's."""
+    from refined_spark.pipeline import run_pipeline
+
+    run_dir = str(tmp_path / "run")
+    summary = _run_job_module().main(fx_t1, run_dir, mode="e2e",
+                                     spark=spark)
+    assert summary["n_docs"] == 120
+    assert summary["stages_run"] == [
+        "mentions", "candidates", "links", "clusters"]
+    got = {tuple(r) for r in read_parquet(
+        spark, os.path.join(run_dir, "clusters", "data")).select(
+        "url", "start", "cluster_id").collect()}
+    res = run_pipeline(spark, fx_t1, mode="e2e")
+    try:
+        want = {tuple(r) for r in res["clusters"].select(
+            "url", "start", "cluster_id").collect()}
+    finally:
+        res["unpersist"]()
+    assert got and got == want

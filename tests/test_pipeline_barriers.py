@@ -38,3 +38,20 @@ def test_scoring_plan_reads_only_barriers(spark, fx_t1, mode):
         assert "_embed_udf" not in plan
     finally:
         res["unpersist"]()
+
+
+@pytest.mark.parametrize("bad", [dict(mode="span"),
+                                 dict(typing_mode="bogus")])
+def test_bad_protocol_raises_before_any_job(spark, fx_t1, bad):
+    """A misspelt mode or typing mode is rejected at entry: no Spark job
+    runs (a bad mode used to run the e2e branch under its own name)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-protocol", "bad-protocol")
+    try:
+        with pytest.raises(ValueError, match=next(iter(bad))):
+            run_pipeline(spark, fx_t1, **bad)
+        assert not sc.statusTracker().getJobIdsForGroup("bad-protocol")
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)

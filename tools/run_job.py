@@ -2,7 +2,8 @@
 
 Usage (via tools/submit.sh):
     spark-submit --py-files refined_spark.zip tools/run_job.py \
-        <corpus_dir> <run_dir> [--backward-coref] [--typing-mode=et]
+        <corpus_dir> <run_dir> [--mode=e2e] [--backward-coref] \
+        [--typing-mode=et]
 
 Cancellation (the reference's cancel-endpoint analog,
 api/app/endpoints/refined_api.py:192-206): from any shell,
@@ -30,34 +31,44 @@ import time
 from pyspark.sql import SparkSession
 
 
-def main(corpus_dir: str, run_dir: str,
-         backward_coref: bool = False, typing_mode: str = "prior") -> None:
-    spark = SparkSession.builder.appName("refined_spark_job").getOrCreate()
-    from refined_spark.checkpoint import run_pipeline_checkpointed
+def main(corpus_dir: str, run_dir: str, mode: str = "spans",
+         backward_coref: bool = False, typing_mode: str = "prior",
+         spark: SparkSession | None = None) -> dict:
+    """Run (or resume) the job and print its one-line JSON summary, which
+    it also returns. A ``spark`` session passed in stays the caller's;
+    without one the job makes its own and stops it at the end."""
+    own_session = spark is None
+    if own_session:
+        spark = SparkSession.builder.appName("refined_spark_job").getOrCreate()
+    from refined_spark.checkpoint import (JobCancelledError,
+                                          run_pipeline_checkpointed)
+    from refined_spark.footers import footer_row_counts, read_parquet
     from refined_spark.operators.extract import assert_extraction_contract
+    from refined_spark.pipeline import check_protocol
 
-    from refined_spark.checkpoint import JobCancelledError
-
+    check_protocol(mode, typing_mode)     # before the guard's job
     t0 = time.time()
     # guard: sampled JVM-extractor vs parser-spec cross-check — a corpus
     # violating the extraction HTML contract fails loudly here instead of
     # silently shifting span offsets downstream
-    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
-    n_checked = assert_extraction_contract(docs, mod=64)
+    docs_path = f"{corpus_dir}/documents.parquet"
+    n_checked = assert_extraction_contract(read_parquet(spark, docs_path),
+                                           mod=64)
     try:
         res = run_pipeline_checkpointed(spark, corpus_dir, run_dir,
-                                        mode="spans",
+                                        mode=mode,
                                         backward_coref=backward_coref,
                                         typing_mode=typing_mode)
     except JobCancelledError as e:
         print(json.dumps(dict(status="cancelled", detail=str(e),
                               wall_sec=round(time.time() - t0, 2))))
-        spark.stop()
+        if own_session:
+            spark.stop()
         raise SystemExit(3) from e
-    n_docs = res["tables"]["documents"].count()
+    n_docs = sum(n for _, n in footer_row_counts(docs_path))
     n_clusters = res["clusters"].select("cluster_id").distinct().count()
     dt = time.time() - t0
-    print(json.dumps(dict(
+    summary = dict(
         n_docs=n_docs,
         n_clusters=n_clusters,
         wall_sec=round(dt, 2),
@@ -65,8 +76,11 @@ def main(corpus_dir: str, run_dir: str,
         extraction_contract_sampled=n_checked,
         stages_run=res["runner"].stages_run,
         stages_resumed=res["runner"].stages_resumed,
-    )))
-    spark.stop()
+    )
+    print(json.dumps(summary))
+    if own_session:
+        spark.stop()
+    return summary
 
 
 if __name__ == "__main__":
@@ -81,18 +95,20 @@ if __name__ == "__main__":
         print(json.dumps(dict(status="cancel_requested",
                               run_dir=sys.argv[2])))
     else:
-        # protocol flags (both fold into the checkpoint fingerprint, so a
+        # protocol flags (all fold into the checkpoint fingerprint, so a
         # run_dir submitted under one protocol recomputes under another):
+        #   --mode=e2e            dictionary mention detection (default
+        #                         spans: the corpus's gold spans)
         #   --backward-coref      2-pass person coref
         #   --typing-mode=et      real F4 entity-typing features in ED
         args = [a for a in sys.argv[1:] if not a.startswith("--")]
         flags = [a for a in sys.argv[1:] if a.startswith("--")]
-        tmode = "prior"
+        opts = dict(mode="spans", typing_mode="prior")
         for f in flags:
-            if f.startswith("--typing-mode="):
-                tmode = f.split("=", 1)[1]
+            if f.startswith(("--mode=", "--typing-mode=")):
+                k, v = f[2:].split("=", 1)
+                opts[k.replace("-", "_")] = v
             elif f != "--backward-coref":
                 raise SystemExit(f"unknown flag {f}")
         main(args[0], args[1],
-             backward_coref="--backward-coref" in flags,
-             typing_mode=tmode)
+             backward_coref="--backward-coref" in flags, **opts)
