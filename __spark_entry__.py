@@ -1122,28 +1122,15 @@ def q_links_et(spark, sf):
     (asserted at fixture-gen time — non-vacuous)."""
     from refined_spark.operators.candidates import (
         mention_candidate_arrays, pem_surface_arrays)
-    from refined_spark.operators.entity_typing import (
-        class_names_sorted, et_confidence_table)
-    from refined_spark.operators.extract import with_extracted_text
-    from refined_spark.operators.mentions import mentions_from_spans
-    from refined_spark.operators.scoring import (links_from_logits,
-                                                 with_candidate_logits)
-    from refined_spark.operators.wikidata import class_vocab_from_edges
-    from refined_spark.pipeline import load_weights
+    from refined_spark.pipeline import (build_links, build_mentions,
+                                        build_resources)
 
-    docs = with_extracted_text(_fx(spark, sf, "documents")).select(
-        "url", F.col("extracted").alias("text"))
-    mentions = mentions_from_spans(docs, _fx(spark, sf, "gold_spans"))
-    arrays = pem_surface_arrays(_fx(spark, sf, "pem"),
-                                _fx(spark, sf, "entity"))
-    cand_arr = mention_candidate_arrays(mentions, arrays)
-    names = class_names_sorted(
-        class_vocab_from_edges(_fx(spark, sf, "class_edges")))
-    tf = et_confidence_table(cand_arr.select("ctx_word"), names)
-    weights = load_weights(_fx(spark, sf, "ed_weights"))
-    links = links_from_logits(with_candidate_logits(
-        cand_arr, _fx(spark, sf, "entity"), _fx(spark, sf, "entity_emb"),
-        _fx(spark, sf, "topic_class"), weights, typing_frame=tf))
+    r = build_resources(spark, ensure_fixtures(sf), typing_mode="et")
+    t = r.tables
+    mentions = build_mentions(spark, r, t["documents"], guard_mod=None)
+    cand_arr = mention_candidate_arrays(
+        mentions, pem_surface_arrays(t["pem"], t["entity"]))
+    _, links = build_links(r, cand_arr)
     return links.select("url", "start", "pred_qcode").orderBy("url", "start")
 
 

@@ -26,9 +26,12 @@ unlinked span) and ``top_k`` mirroring ``top_k_predicted_entities``
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .caching import cache_scope
 from .pipeline import run_pipeline
 
 
@@ -154,6 +157,20 @@ class RefinedSpark:
 
     # -- single-text sugar (the reference's original call shape) ----------
 
+    @contextmanager
+    def _scoped_release(self):
+        """Release ONLY the caches of the pipelines run inside the
+        with-block, once it ends: the tracked operator persists
+        (caching.cache_scope), then those pipelines' unpersist hooks. A
+        global release_caches() here would also drain caches backing a
+        still-live process_documents frame from an earlier call."""
+        n_hooks = len(self._unpersist_hooks)
+        with cache_scope():
+            yield
+        for h in self._unpersist_hooks[n_hooks:]:
+            h()
+        del self._unpersist_hooks[n_hooks:]
+
     def process_text(self, text: str,
                      spans: list[tuple[int, int]] | None = None) -> list:
         """One document through the same plan; returns collected Rows
@@ -165,33 +182,17 @@ class RefinedSpark:
             spans_df = self.spark.createDataFrame(
                 [("doc0", s, ln, text[s:s + ln]) for s, ln in spans],
                 "url string, start int, length int, mention_text string")
-        from .caching import cache_scope
-
-        # SCOPED release: only this call's pipeline caches — a global
-        # release_caches() here would also drain caches backing a
-        # still-live process_documents frame from an earlier call
-        n_hooks = len(self._unpersist_hooks)
-        with cache_scope():
+        with self._scoped_release():
             out = self.process_documents(docs, spans_df=spans_df)
-            rows = out.orderBy("start").collect()
-        for h in self._unpersist_hooks[n_hooks:]:
-            h()
-        del self._unpersist_hooks[n_hooks:]
-        return rows
+            return out.orderBy("start").collect()
 
     def process_text_batch(self, texts: list[str]) -> dict[int, list]:
         """Batch sugar: index -> span rows (processor.py:185-208)."""
         docs = self.spark.createDataFrame(
             [(f"doc{i}", bytearray(t.encode("utf-8")))
              for i, t in enumerate(texts)], "url string, html binary")
-        from .caching import cache_scope
-
-        n_hooks = len(self._unpersist_hooks)
-        with cache_scope():  # scoped — see process_text
+        with self._scoped_release():
             out = self.process_documents(docs).collect()
-        for h in self._unpersist_hooks[n_hooks:]:
-            h()
-        del self._unpersist_hooks[n_hooks:]
         by_doc: dict[int, list] = {i: [] for i in range(len(texts))}
         for r in out:
             by_doc[int(r["url"][3:])].append(r)

@@ -34,7 +34,6 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .footers import footer_row_counts, read_parquet
 
@@ -56,6 +55,10 @@ class JobCancelledError(RuntimeError):
 # pipeline recomputes instead of resuming with a stale layout (v2: the
 # candidates stage became the array-per-mention frame).
 PIPELINE_SCHEMA_VERSION = 3  # v3: candidate frame carries norm_sf/has_coref
+
+# density of the production job's extraction guard: 1/64 of the documents
+# also run the Python parser spec in the ``mentions`` stage
+EXTRACTION_GUARD_MOD = 64
 
 
 class CheckpointRunner:
@@ -216,8 +219,16 @@ def run_pipeline_checkpointed(
     backward_coref: bool = False,
     typing_mode: str = "prior",
 ) -> dict:
-    """The production entry point: same stages as run_pipeline, but each
-    stage materialized + manifested, resumable mid-pipeline.
+    """The production entry point: the stages of run_pipeline, built by
+    the same builders, but each stage materialized + manifested,
+    resumable mid-pipeline.
+
+    The ``mentions`` stage guards its own documents
+    (pipeline.build_mentions, 1/:data:`EXTRACTION_GUARD_MOD` sampled):
+    spans mode runs the standalone guard job inside the stage, e2e mode
+    the guard fused into the MD scan the stage writes. A contract
+    violation fails the stage before its manifest is written; a resume
+    that reuses ``mentions`` runs no guard.
 
     ``backward_coref`` and ``typing_mode`` fold into the run
     fingerprint: a run_dir checkpointed under one coref/typing protocol
@@ -227,46 +238,32 @@ def run_pipeline_checkpointed(
         pem_surface_arrays,
     )
     from .operators.clustering import cluster_mentions
-    from .operators.extract import extracted_text_col, with_extracted_text
-    from .operators.mentions import detect_mention_rows, mentions_from_spans
-    from .operators.scoring import links_from_logits, with_candidate_logits
-    from .pipeline import (check_protocol, fixture_content_stamp,
-                           load_tables, load_weights, write_match_dictionary)
+    from .pipeline import (build_links, build_mentions, build_resources,
+                           fixture_content_stamp)
 
-    # before the runner makes run_dir: a bad protocol writes no stage
-    check_protocol(mode, typing_mode)
-    t = load_tables(spark, fixture_dir)
     # the fingerprint covers fixture CONTENT (generator stamps), not
     # just the path: regenerating fixtures in place must dirty every
     # stage, or a resume silently reuses parquet of deleted data — the
     # same hazard class _default_dict_dir guards (round-2 advisor
     # finding), now applied to the checkpoint chain itself
     fx_stamp = fixture_content_stamp(fixture_dir)
+    # the protocol check comes before the runner makes run_dir: a bad
+    # protocol writes no stage. The e2e dictionary artifact lives in the
+    # run_dir (shared storage on a cluster), written by the mentions
+    # stage and keyed by the fixture CONTENT stamp so that a recompute
+    # against regenerated fixtures writes a fresh dictionary instead of
+    # reusing the stale _SUCCESS-guarded one
+    r = build_resources(
+        spark, fixture_dir, mode, typing_mode,
+        dict_dir=os.path.join(run_dir, f"match_dict-{fx_stamp[:12]}"))
+    t = r.tables
     runner = CheckpointRunner(
         spark, run_dir, run_inputs=dict(fixture_dir=fixture_dir, mode=mode,
                                         fixture_stamp=fx_stamp,
                                         backward_coref=backward_coref,
                                         typing_mode=typing_mode))
-
-    def build_mentions():
-        if mode == "spans":
-            docs = with_extracted_text(t["documents"]).select(
-                "url", F.col("extracted").alias("text"))
-            return mentions_from_spans(docs, t["gold_spans"])
-        docs = t["documents"].withColumn(
-            "text", extracted_text_col("html"))
-        # dictionary artifact lives in the run_dir (shared storage on a
-        # cluster) and is loaded lazily by each worker — no driver
-        # collect. The dir is keyed by the fixture CONTENT stamp so a
-        # forced recompute against regenerated fixtures writes a fresh
-        # dictionary instead of reusing the stale _SUCCESS-guarded one
-        # (the stale-dict variant of the fingerprint hazard above).
-        dict_path = write_match_dictionary(
-            t["pem"], t["entity"],
-            os.path.join(run_dir, f"match_dict-{fx_stamp[:12]}"))
-        return detect_mention_rows(spark, docs, dict_path=dict_path)
-
-    mentions = runner.stage("mentions", build_mentions)
+    mentions = runner.stage("mentions", lambda: build_mentions(
+        spark, r, t["documents"], EXTRACTION_GUARD_MOD))
     # checkpointed candidates = the ARRAY frame (one row per mention with
     # its merged candidate list) — parquet holds the nested type natively
     # and the links stage resumes from it without re-aggregating
@@ -275,25 +272,7 @@ def run_pipeline_checkpointed(
         lambda: mention_candidate_arrays(
             mentions, pem_surface_arrays(t["pem"], t["entity"]),
             backward=backward_coref))
-    weights = load_weights(t["ed_weights"])
-
-    def build_links():
-        typing_frame = None
-        if typing_mode == "et":
-            from .operators.entity_typing import (class_names_sorted,
-                                                  et_confidence_table)
-            from .operators.wikidata import class_vocab_from_edges
-
-            names = class_names_sorted(
-                class_vocab_from_edges(t["class_edges"]))
-            typing_frame = et_confidence_table(
-                candidates.select("ctx_word"), names)
-        return links_from_logits(
-            with_candidate_logits(candidates, t["entity"],
-                                  t["entity_emb"], t["topic_class"],
-                                  weights, typing_frame=typing_frame))
-
-    links = runner.stage("links", build_links)
+    links = runner.stage("links", lambda: build_links(r, candidates)[1])
     clusters = runner.stage("clusters", lambda: cluster_mentions(links))
     return dict(mentions=mentions, candidates=candidates, links=links,
                 clusters=clusters, runner=runner, tables=t)

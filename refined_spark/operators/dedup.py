@@ -53,18 +53,6 @@ def _shingles(text: str, k: int) -> set[str]:
     return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
 
 
-def _char_shingles(text: str, k: int) -> set[str]:
-    """Character k-gram shingles — for SHORT strings (surface forms).
-    Word shingles degenerate on 1-3 word surfaces (a single shingle, so one
-    typo drops Jaccard to 0); char 3-grams keep typo'd aliases similar."""
-    t = text.lower()
-    if not t:
-        return set()
-    if len(t) <= k:
-        return {t}
-    return {t[i:i + k] for i in range(len(t) - k + 1)}
-
-
 def _hash64(s: str, seed: int = 0) -> int:
     h = hashlib.blake2b(s.encode("utf-8"), digest_size=8,
                         key=seed.to_bytes(8, "little")).digest()

@@ -19,11 +19,12 @@ Contract:
 - runs of whitespace inside a block are collapsed to single spaces,
   blocks are stripped; empty blocks dropped
 
-Spark surface: :func:`with_extracted_text` — an Arrow-batched pandas UDF
-(html is opaque bytes; this is inherently per-row scalar work, the
-sanctioned UDF case). Scale: pure map, no shuffle; pipelines with the
-parquet scan; column-pruned (only ``html`` is read if only ``extracted``
-is selected downstream).
+Spark surface: :func:`extracted_text_col` / :func:`with_extracted_text`
+— the same extraction as a JVM regexp chain inside codegen, with the
+Python parser kept as the executable spec that the sampled runtime guard
+(:func:`assert_extraction_contract`) and pytest check it against. Scale:
+pure map, no shuffle; pipelines with the parquet scan; column-pruned
+(only ``html`` is read if only ``extracted`` is selected downstream).
 """
 
 from __future__ import annotations
@@ -35,8 +36,6 @@ from html.parser import HTMLParser
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 _BLOCK_TAGS = {"p", "h1", "h2", "h3", "h4", "h5", "h6", "li", "div", "title"}
 _DROP_TAGS = {"script", "style"}
@@ -90,11 +89,6 @@ def extract_text(html: bytes | str) -> str:
     parser.feed(html)
     parser.close()
     return parser.result()
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text)
 
 
 def extracted_text_col(html_col):
@@ -169,9 +163,9 @@ def assert_extraction_contract(documents: DataFrame,
     shift every downstream span offset — this check makes it fail loudly
     for ~1/mod of the scan cost. One job: each partition emits one
     summary row (sampled, mismatched, up to 5 urls) that the driver sums.
-    Production jobs (tools/run_job.py) run it as a guard action; e2e
-    ``run_pipeline`` runs the same check inside its mentions scan
-    instead; golden pytest covers the full fixture corpus.
+    ``pipeline.build_mentions`` runs it in spans mode, and in e2e mode
+    the same check inside the mentions scan (:func:`sampled_html_col`);
+    golden pytest covers the full fixture corpus.
     """
     both = documents.where(_sampled(mod)).select(
         "url", "html", extracted_text_col("html").alias("jvm_text"))
@@ -194,12 +188,8 @@ def assert_extraction_contract(documents: DataFrame,
     return sum(r["n"] for r in rows)
 
 
-def with_extracted_text(documents: DataFrame, out_col: str = "extracted",
-                        jvm: bool = True) -> DataFrame:
-    """documents(url, warc_ts, html, text, lang) -> + extracted STRING.
-
-    ``jvm=True`` (default): codegen regexp chain; ``jvm=False``: the
-    Python reference parser as an Arrow UDF (the executable spec)."""
-    col = (extracted_text_col("html") if jvm
-           else extract_text_udf(documents["html"]))
-    return documents.withColumn(out_col, col)
+def with_extracted_text(documents: DataFrame,
+                        out_col: str = "extracted") -> DataFrame:
+    """documents(url, warc_ts, html, text, lang) -> + extracted STRING,
+    by the codegen regexp chain (:func:`extracted_text_col`)."""
+    return documents.withColumn(out_col, extracted_text_col("html"))

@@ -431,21 +431,3 @@ def with_class_check(links: DataFrame, mentions: DataFrame,
                     F.when(failed, F.lit(-1.0)).otherwise(F.col("confidence")))
         .drop("ctx_word", "t_class_idx", "ent_classes")
     )
-
-
-def explode_scored_arrays(with_logits: DataFrame) -> DataFrame:
-    """Array frame -> per-(mention, candidate) scored rows (the public
-    ``scored`` table). Pure map."""
-    z = with_logits.select(
-        "mention_key",
-        F.posexplode(F.arrays_zip("cand_arr", "logits")).alias("pos", "z"))
-    return z.select(
-        "mention_key",
-        F.col("z.cand_arr.qcode").alias("qcode"),
-        F.col("z.cand_arr.prob").alias("prob"),
-        F.when(F.col("z.cand_arr.src_order") == 0, F.lit("direct"))
-        .when(F.col("z.cand_arr.src_order") == 1, F.lit("coref"))
-        .alias("cand_source"),
-        (F.col("pos") + 1).cast("int").alias("cand_rank"),
-        F.col("z.logits").alias("logit"),
-    )

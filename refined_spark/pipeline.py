@@ -28,11 +28,19 @@ Shuffle census at scale (the thing that matters at 100 TB):
      graph (log-bounded; 2-3 on ER graphs).
 Filters/column pruning reach the parquet scan (only url/html/text/lang are
 read; `html` only when extraction runs).
+
+Composition: the stages are built in one place, by :func:`build_resources`,
+:func:`build_mentions` and :func:`build_links`. Every executor calls them
+and adds only its own execution policy: :func:`run_pipeline` (in-memory
+barriers and the vocabulary scoring chain),
+checkpoint.run_pipeline_checkpointed (parquet stages, resumable) and
+streaming.linking.StreamingLinker (resources once, stages per batch).
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,20 +55,24 @@ from .operators.candidates import (
     pem_surface_arrays,
 )
 from .operators.clustering import cluster_mentions
+from .operators.entity_typing import class_names_sorted, et_confidence_table
 from .operators.extract import (
     assert_extraction_contract,
     extracted_text_col,
     sampled_html_col,
-    with_extracted_text,
 )
 from .operators.mentions import detect_mention_rows, mentions_from_spans
 from .operators.scoring import (
-    explode_scored_arrays,
     feature_map_by_ctx,
     links_from_logits,
     observed_pairs_from_mentions,
     with_candidate_logits,
 )
+from .operators.wikidata import class_vocab_from_edges
+
+# default density of the sampled extraction-contract guard: 1/4096 of the
+# documents also run the Python parser spec (build_mentions)
+EXTRACTION_GUARD_MOD = 4096
 
 
 def load_tables(spark: SparkSession, fixture_dir: str) -> dict[str, DataFrame]:
@@ -177,15 +189,112 @@ def check_protocol(mode: str, typing_mode: str) -> None:
                          f"got {typing_mode!r}")
 
 
+@dataclass(frozen=True)
+class Resources:
+    """The static inputs of one ER protocol: the tables, the ED
+    weights, the match dictionary's dir (e2e mode) and the ET class
+    names (et mode)."""
+
+    mode: str
+    typing_mode: str
+    tables: dict[str, DataFrame]
+    weights: dict[str, float]
+    dict_path: str | None
+    class_names: list[str] | None
+
+
+def build_resources(spark: SparkSession, fixture_dir: str,
+                    mode: str = "spans", typing_mode: str = "prior",
+                    dict_dir: str | None = None) -> Resources:
+    """Check the protocol, then load what every stage reads. In e2e mode
+    the match dictionary's place is ``dict_dir`` (default: a dir keyed
+    by the fixture content stamp); :func:`build_mentions` writes it on
+    first use. The ET class names are one model-parameter-scale
+    collect."""
+    check_protocol(mode, typing_mode)
+    t = load_tables(spark, fixture_dir)
+    dict_path = class_names = None
+    if mode == "e2e":
+        dict_path = dict_dir or _default_dict_dir(fixture_dir)
+    if typing_mode == "et":
+        class_names = class_names_sorted(
+            class_vocab_from_edges(t["class_edges"]))
+    return Resources(mode, typing_mode, t, load_weights(t["ed_weights"]),
+                     dict_path, class_names)
+
+
+def build_mentions(spark: SparkSession, r: Resources, documents: DataFrame,
+                   guard_mod: int | None,
+                   pre_extracted: bool = False) -> DataFrame:
+    """The mention rows of ``documents``: the gold spans over the
+    extracted text (spans mode) or dictionary MD over it (e2e mode; the
+    match dictionary is written here unless one is already committed,
+    so a checkpointed run writes it inside its ``mentions`` stage).
+    Extraction runs JVM-side inside the scan stage; only (url, text)
+    leaves it.
+
+    The sampled extraction-contract guard lives here. The JVM extractor
+    equals the Python parser spec only on the corpus HTML contract, and
+    a violating corpus would silently shift every downstream span
+    offset, so ~1/``guard_mod`` of the documents run both and a mismatch
+    fails loudly. Spans mode has no Python stage on the scan: it runs
+    the one-job standalone guard now, before the frame exists. E2e mode
+    carries the sampled html into the MD scan (``spec_col``), so the
+    guard fires in the first action over the returned frame.
+    ``guard_mod=None`` and ``pre_extracted=True`` (``documents`` already
+    carries ``text``, the reference's ``Doc.from_text`` shape) skip it.
+    """
+    guard = bool(guard_mod) and not pre_extracted
+    if guard and r.mode == "spans":
+        assert_extraction_contract(documents, mod=guard_mod)
+    text = F.col("text") if pre_extracted else extracted_text_col("html")
+    spec = ([sampled_html_col(guard_mod).alias("spec_html")]
+            if guard and r.mode == "e2e" else [])
+    docs = documents.select("url", text.alias("text"), *spec)
+    if r.mode == "spans":
+        return mentions_from_spans(docs, r.tables["gold_spans"])
+    dict_path = write_match_dictionary(r.tables["pem"], r.tables["entity"],
+                                       r.dict_path)
+    return detect_mention_rows(spark, docs, dict_path=dict_path,
+                               spec_col="spec_html" if spec else None)
+
+
+def _typing_frame(r: Resources, ctx_words: DataFrame) -> DataFrame | None:
+    """The ET confidence table over ``ctx_words`` in et mode, else None.
+    A row is a pure function of (ctx_word, class vocab), so a frame over
+    a batch's words carries the full corpus's values for them."""
+    if r.typing_mode != "et":
+        return None
+    return et_confidence_table(ctx_words, r.class_names)
+
+
+def build_links(r: Resources, cand_arr: DataFrame,
+                feature_map: DataFrame | None = None,
+                pair_logits: DataFrame | None = None,
+                ) -> tuple[DataFrame, DataFrame]:
+    """Score the candidate arrays and link them: ``(with_logits,
+    links)``. Without a prebuilt ``feature_map`` the map is built from
+    ``cand_arr``'s own (ctx_word, qcode) pairs, with the ET typing frame
+    over its ctx words; a prebuilt map already carries its typing
+    features. ``pair_logits``: see scoring.with_candidate_logits."""
+    t = r.tables
+    typing_frame = (_typing_frame(r, cand_arr.select("ctx_word"))
+                    if feature_map is None else None)
+    with_logits = with_candidate_logits(
+        cand_arr, t["entity"], t["entity_emb"], t["topic_class"], r.weights,
+        feature_map=feature_map, pair_logits=pair_logits,
+        typing_frame=typing_frame)
+    return with_logits, links_from_logits(with_logits)
+
+
 def run_pipeline(
     spark: SparkSession,
     fixture_dir: str,
     mode: str = "spans",
-    broadcast_pem: bool = True,
     dict_dir: str | None = None,
     documents: DataFrame | None = None,
     gold_spans: DataFrame | None = None,
-    extraction_guard_mod: int | None = 4096,
+    extraction_guard_mod: int | None = EXTRACTION_GUARD_MOD,
     emb_precision: str = "fp32",
     backward_coref: bool = False,
     typing_mode: str = "prior",
@@ -211,6 +320,12 @@ def run_pipeline(
     raw dataset text with no HTML stage) — so extraction and its
     contract guard are skipped.
 
+    Extraction guard (default on, 1/``extraction_guard_mod`` of the
+    documents; None opts out): see :func:`build_mentions`. Spans mode
+    runs it as one standalone job before the mentions barrier; e2e mode
+    runs it inside the mentions scan, so a violation fails the
+    ``mentions`` barrier and leaves no cache behind.
+
     Barrier policy: every per-run table is computed once. Doc-scale
     frames (``mentions``, ``links``) are ``persist()``ed and counted in
     dependency order. Vocabulary-scale frames (the alias arrays, the
@@ -225,8 +340,11 @@ def run_pipeline(
     result's life: it releases the caches and the checkpoints, after
     which frames derived from the result fail instead of recomputing.
     """
-    check_protocol(mode, typing_mode)
-    t = load_tables(spark, fixture_dir)
+    if emb_precision not in ("fp32", "fp16"):
+        raise ValueError(f"emb_precision must be fp32|fp16, "
+                         f"got {emb_precision!r}")
+    r = build_resources(spark, fixture_dir, mode, typing_mode, dict_dir)
+    t = r.tables
     # the API facade (api.RefinedSpark) processes caller-supplied corpora
     # against the fixture_dir's RESOURCE tables (pem/entity/embeddings…)
     if documents is not None:
@@ -241,57 +359,14 @@ def run_pipeline(
 
         t["entity_emb"] = read_entity_emb_fp16(
             spark, ensure_fp16_sidecar(spark, fixture_dir))
-    elif emb_precision != "fp32":
-        raise ValueError(f"emb_precision must be fp32|fp16, "
-                         f"got {emb_precision!r}")
-
-    # Default-on sampled extraction-contract guard: the JVM extractor is
-    # byte-identical to the Python parser spec only on the corpus HTML
-    # contract; a violating corpus would silently shift every downstream
-    # span offset, so ~1/mod of the documents run both extractors and a
-    # mismatch fails loudly (pass None to opt out; tools/run_job.py runs
-    # the denser mod=256 variant as a standalone guard stage). In e2e
-    # mode the check rides the mentions scan (the sampled html crosses
-    # to Python next to its JVM text) and fires inside the mentions
-    # barrier; spans mode has no Python stage on the scan, so it runs
-    # the one-job standalone guard.
-    guard = bool(extraction_guard_mod) and not pre_extracted
-    if guard and mode == "spans":
-        assert_extraction_contract(t["documents"], mod=extraction_guard_mod)
-
-    if pre_extracted and mode == "spans":
-        docs = t["documents"].select("url", "text")
-        mentions = mentions_from_spans(docs, t["gold_spans"])
-    elif mode == "spans":
-        # extraction runs map-side on scan partitions; only (url, text)
-        # reaches the spans join shuffle — html never leaves the scan
-        docs = with_extracted_text(t["documents"]).select(
-            "url", F.col("extracted").alias("text"))
-        mentions = mentions_from_spans(docs, t["gold_spans"])
-    else:
-        # extraction runs JVM-side inside the scan stage (codegen regexp
-        # chain, golden-checked vs the Python parser); only the dictionary
-        # matcher crosses to Python — one Arrow hop, text in, mention
-        # rows out
-        if pre_extracted:
-            docs = t["documents"].select("url", "text")
-        else:
-            spec = ([sampled_html_col(extraction_guard_mod).alias(
-                "spec_html")] if guard else [])
-            docs = t["documents"].select(
-                "url", extracted_text_col("html").alias("text"), *spec)
-        dict_path = write_match_dictionary(
-            t["pem"], t["entity"], dict_dir or _default_dict_dir(fixture_dir))
-        mentions = detect_mention_rows(
-            spark, docs, dict_path=dict_path,
-            spec_col="spec_html" if guard else None)
 
     # The mentions subtree (html parse + dictionary match — the most
     # expensive map stage) is referenced by candidates, scoring AND links;
     # without persistence the final action recomputes it three times.
     # At cluster scale the equivalent is the checkpointed stage table
     # (checkpoint.py); locally an in-memory persist.
-    mentions = mentions.persist()
+    mentions = build_mentions(spark, r, t["documents"], extraction_guard_mod,
+                              pre_extracted=pre_extracted).persist()
     # The distinct (surface, ctx) pairs drive the feature domain, the
     # pair logits and the ET table: persisted so that the doc-scale
     # mentions cache is scanned once for this vocabulary-sized result.
@@ -316,31 +391,19 @@ def run_pipeline(
     ckpts: list = []        # RDDs of the vocabulary-scale checkpoints
     pem_arrays = local_checkpoint(
         pem_surface_arrays(t["pem"], t["entity"]), ckpts)
-    cand_arr = mention_candidate_arrays(
-        mentions, pem_arrays, broadcast_pem=broadcast_pem,
-        backward=backward_coref)
-    weights = load_weights(t["ed_weights"])
+    cand_arr = mention_candidate_arrays(mentions, pem_arrays,
+                                        backward=backward_coref)
     # feature domain from surf_ctx (not cand_arr), so the candidate
     # subtree is consumed exactly once per action and never needs
     # caching; zero doc-scale shuffles (see observed_pairs docstring)
     pairs = local_checkpoint(
         observed_pairs_from_mentions(mentions, pem_arrays,
                                      surf_ctx=surf_ctx), ckpts)
-    typing_frame = None
-    if typing_mode == "et":
-        # F4 forward pass over the distinct context vocabulary; the
-        # class weight "matrix" derives from the class-edge vocab alone
-        # (model-parameter scale) — see entity_typing.py
-        from .operators.entity_typing import (class_names_sorted,
-                                              et_confidence_table)
-        from .operators.wikidata import class_vocab_from_edges
-
-        names = class_names_sorted(class_vocab_from_edges(t["class_edges"]))
-        typing_frame = et_confidence_table(
-            surf_ctx.select("ctx_word"), names)
     fmap = local_checkpoint(
         feature_map_by_ctx(pairs, t["entity"], t["entity_emb"],
-                           t["topic_class"], typing_frame=typing_frame),
+                           t["topic_class"],
+                           typing_frame=_typing_frame(
+                               r, surf_ctx.select("ctx_word"))),
         ckpts)
     # Zipf dedup of the scoring math: logits once per DISTINCT
     # (surface, ctx) pair, broadcast back; per-mention evaluation only
@@ -348,23 +411,20 @@ def run_pipeline(
     # the pair table is bytes-tiny but its logits projection is the
     # heaviest per-row JVM math in the job, so AQE's size-based
     # coalescing would serialize it onto one task; pin at core width
-    pair_frame = pair_candidate_arrays(
-        surf_ctx, pem_arrays, broadcast_pem=broadcast_pem,
-    ).repartition(spark.sparkContext.defaultParallelism)
+    pair_frame = pair_candidate_arrays(surf_ctx, pem_arrays).repartition(
+        spark.sparkContext.defaultParallelism)
     pair_logits = local_checkpoint(
         with_candidate_logits(pair_frame, t["entity"], t["entity_emb"],
-                              t["topic_class"], weights, feature_map=fmap),
+                              t["topic_class"], r.weights, feature_map=fmap),
         ckpts)
-    with_logits = with_candidate_logits(
-        cand_arr, t["entity"], t["entity_emb"], t["topic_class"], weights,
-        feature_map=fmap, pair_logits=pair_logits)
-    candidates = explode_candidate_arrays(cand_arr).where(
-        F.col("qcode").isNotNull())
-    scored = explode_scored_arrays(with_logits)
-    links = links_from_logits(with_logits).persist()
+    with_logits, links = build_links(r, cand_arr, feature_map=fmap,
+                                     pair_logits=pair_logits)
+    links = links.persist()
     # same barrier: callers read links next to clusters, so the scoring
     # pass runs once, here
     links.count()
+    candidates = explode_candidate_arrays(cand_arr).where(
+        F.col("qcode").isNotNull())
     clusters = cluster_mentions(links)
 
     def unpersist() -> None:
@@ -378,6 +438,6 @@ def run_pipeline(
         links.unpersist()
         release_checkpoints(ckpts)
 
-    return dict(mentions=mentions, candidates=candidates, scored=scored,
-                links=links, clusters=clusters, cand_arr=cand_arr,
+    return dict(mentions=mentions, candidates=candidates, links=links,
+                clusters=clusters, cand_arr=cand_arr,
                 with_logits=with_logits, tables=t, unpersist=unpersist)

@@ -32,8 +32,13 @@ Scale notes (1000-executor / 100 TB framing):
 - Per batch, the plan is the batch pipeline's map-heavy core: html
   never leaves the scan stage, candidates attach via the broadcast
   alias join, scoring is codegen array math, the link projection is
-  shuffle-free. The only shuffles are the two narrow single-word coref
-  shuffles — bounded by batch size, not stream history.
+  shuffle-free. Past the mentions (spans mode joins the gold spans on
+  url), the only doc-scale shuffle is the one hash shuffle of the
+  key-width mention rows on url for doc-local coref — bounded by batch
+  size, not stream history.
+- Each batch's documents pass the sampled extraction-contract guard
+  (pipeline.build_mentions): a standalone job per batch in spans mode,
+  fused into the MD scan in e2e mode.
 - No unbounded state: linking is stateless per document, so there is
   no watermark and no state store growth; the sink is an append-only
   table.
@@ -47,17 +52,13 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.candidates import (
     mention_candidate_arrays,
     pem_surface_arrays,
 )
-from ..operators.extract import with_extracted_text
-from ..operators.mentions import detect_mention_rows, mentions_from_spans
-from ..operators.scoring import links_from_logits, with_candidate_logits
-from ..pipeline import load_tables, load_weights, write_match_dictionary, \
-    _default_dict_dir
+from ..pipeline import (EXTRACTION_GUARD_MOD, build_links, build_mentions,
+                        build_resources)
 
 LINK_COLS = ["url", "start", "mention_key", "pred_qcode", "confidence"]
 
@@ -70,70 +71,27 @@ class StreamingLinker:
     def __init__(self, spark: SparkSession, fixture_dir: str,
                  mode: str = "spans", backward_coref: bool = False,
                  dict_dir: str | None = None, typing_mode: str = "prior"):
-        if mode not in ("spans", "e2e"):
-            raise ValueError(f"mode must be spans|e2e, got {mode!r}")
-        if typing_mode not in ("prior", "et"):
-            raise ValueError(f"typing_mode must be prior|et, "
-                             f"got {typing_mode!r}")
         self.spark = spark
-        self.mode = mode
         self.backward = backward_coref
-        self.typing_mode = typing_mode
-        t = load_tables(spark, fixture_dir)
-        self.tables = t
-        self.weights = load_weights(t["ed_weights"])
+        self.resources = build_resources(spark, fixture_dir, mode,
+                                         typing_mode, dict_dir)
+        t = self.resources.tables
         # static across every batch → persist + materialize now so
         # micro-batches hit cached blocks instead of rebuilding
         self.pem_arrays = pem_surface_arrays(t["pem"], t["entity"]).persist()
         self.pem_arrays.count()
-        self.dict_path = None
-        if mode == "e2e":
-            self.dict_path = write_match_dictionary(
-                t["pem"], t["entity"],
-                dict_dir or _default_dict_dir(fixture_dir))
-        self.class_names = None
-        if typing_mode == "et":
-            # static model parameter: the class vocabulary (the weight
-            # matrix derives from it executor-side, memoized per process)
-            from ..operators.entity_typing import class_names_sorted
-            from ..operators.wikidata import class_vocab_from_edges
-
-            self.class_names = class_names_sorted(
-                class_vocab_from_edges(t["class_edges"]))
 
     def link_batch(self, documents: DataFrame) -> DataFrame:
         """One micro-batch of input_hint-shaped documents → link rows.
         Pure function of (static resources, batch) — see module
-        docstring for why this equals the batch pipeline's links."""
-        if self.mode == "spans":
-            docs = with_extracted_text(documents).select(
-                "url", F.col("extracted").alias("text"))
-            mentions = mentions_from_spans(docs, self.tables["gold_spans"])
-        else:
-            from ..operators.extract import extracted_text_col
-
-            docs = documents.withColumn(
-                "text", extracted_text_col("html"))
-            mentions = detect_mention_rows(self.spark, docs,
-                                           dict_path=self.dict_path)
+        docstring for why this equals the batch pipeline's links. The
+        batch's documents pass the sampled extraction guard
+        (pipeline.build_mentions)."""
+        mentions = build_mentions(self.spark, self.resources, documents,
+                                  EXTRACTION_GUARD_MOD)
         cand_arr = mention_candidate_arrays(mentions, self.pem_arrays,
                                             backward=self.backward)
-        t = self.tables
-        typing_frame = None
-        if self.typing_mode == "et":
-            # per-batch is per-corpus here: a confidence row is a pure
-            # function of (ctx_word, class vocab), so the batch-subset
-            # frame carries exactly the full-corpus values for the ctx
-            # words present — the same invariance argument as the
-            # feature map
-            from ..operators.entity_typing import et_confidence_table
-
-            typing_frame = et_confidence_table(
-                cand_arr.select("ctx_word"), self.class_names)
-        with_logits = with_candidate_logits(
-            cand_arr, t["entity"], t["entity_emb"], t["topic_class"],
-            self.weights, typing_frame=typing_frame)
-        return links_from_logits(with_logits).select(*LINK_COLS)
+        return build_links(self.resources, cand_arr)[1].select(*LINK_COLS)
 
     def release(self) -> None:
         self.pem_arrays.unpersist()

@@ -18,7 +18,11 @@ resubmission clears the sentinel and resumes from the completed stages.
 The corpus dir must contain the input_hint-shaped ``documents.parquet``
 plus the dimension tables (pem/entity/entity_emb/topic_class/ed_weights);
 ``run_dir`` receives stage checkpoints + manifests and the final
-``clusters`` table.
+``clusters`` table. The ``mentions`` stage runs the sampled
+extraction-contract guard over the corpus (1/64 of the documents, see
+``refined_spark.checkpoint.run_pipeline_checkpointed``): a corpus that
+violates the extraction HTML contract fails there, loudly, instead of
+silently shifting span offsets downstream.
 """
 
 from __future__ import annotations
@@ -42,18 +46,9 @@ def main(corpus_dir: str, run_dir: str, mode: str = "spans",
         spark = SparkSession.builder.appName("refined_spark_job").getOrCreate()
     from refined_spark.checkpoint import (JobCancelledError,
                                           run_pipeline_checkpointed)
-    from refined_spark.footers import footer_row_counts, read_parquet
-    from refined_spark.operators.extract import assert_extraction_contract
-    from refined_spark.pipeline import check_protocol
+    from refined_spark.footers import footer_row_counts
 
-    check_protocol(mode, typing_mode)     # before the guard's job
     t0 = time.time()
-    # guard: sampled JVM-extractor vs parser-spec cross-check — a corpus
-    # violating the extraction HTML contract fails loudly here instead of
-    # silently shifting span offsets downstream
-    docs_path = f"{corpus_dir}/documents.parquet"
-    n_checked = assert_extraction_contract(read_parquet(spark, docs_path),
-                                           mod=64)
     try:
         res = run_pipeline_checkpointed(spark, corpus_dir, run_dir,
                                         mode=mode,
@@ -65,7 +60,8 @@ def main(corpus_dir: str, run_dir: str, mode: str = "spans",
         if own_session:
             spark.stop()
         raise SystemExit(3) from e
-    n_docs = sum(n for _, n in footer_row_counts(docs_path))
+    n_docs = sum(n for _, n in footer_row_counts(
+        f"{corpus_dir}/documents.parquet"))
     n_clusters = res["clusters"].select("cluster_id").distinct().count()
     dt = time.time() - t0
     summary = dict(
@@ -73,7 +69,6 @@ def main(corpus_dir: str, run_dir: str, mode: str = "spans",
         n_clusters=n_clusters,
         wall_sec=round(dt, 2),
         docs_per_sec=round(n_docs / dt, 1),
-        extraction_contract_sampled=n_checked,
         stages_run=res["runner"].stages_run,
         stages_resumed=res["runner"].stages_resumed,
     )
